@@ -4,6 +4,14 @@ The fixture corpus (see /root/repo/FIXTURES.md) lives at
 ``/root/testdata/sf{0.001,0.01,0.1}/<table>.parquet``. All operators load
 through :func:`table` so scans stay uniform (and a future move to a real
 catalog / Delta / Iceberg touches one function).
+
+Schema resolution is memoized, data never is: the first scan of a path
+infers its parquet schema (a Spark job that reads footers), and later
+scans of the same path and content fingerprint (:func:`scratch_tag`)
+pass that ``StructType`` to ``spark.read.schema(...)`` and launch no job.
+A regenerated fixture has a new fingerprint, so its schema is inferred
+again. Nothing is persisted or cached beyond the ``StructType``; every
+scan still reads the files.
 """
 
 from __future__ import annotations
@@ -15,6 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kinesis_datastore_app_spark.tmpdirs import _activity_mtime_deep, prune_aged
 
@@ -195,18 +204,16 @@ def _parquet_layout(src: str) -> tuple[int, int, int]:
     return rows, groups, size
 
 
-def _relaid_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+def _relaid_path(spark: SparkSession, sf_dir: str, name: str, tag: str) -> str:
     """Return the scan path for a fixture table: the source itself when
     its layout already parallelizes, else a one-time re-laid scratch copy
-    (atomic tmp-dir + rename publication, concurrency-safe)."""
+    (atomic tmp-dir + rename publication, concurrency-safe). ``tag`` is
+    the source's :func:`scratch_tag` ("" when it has none)."""
     src = f"{sf_dir.rstrip('/')}/{name}.parquet"
     # Cache key includes the content fingerprint: a fixture regenerated
     # mid-process gets a new tag, so the memoized decision for the stale
     # copy is never served for the fresh one.
-    try:
-        ck = (src, scratch_tag(sf_dir, name))
-    except OSError:
-        ck = (src, "")
+    ck = (src, tag)
     cached = _relayout_checked.get(ck)
     if cached is not None:
         if cached != src:
@@ -220,11 +227,15 @@ def _relaid_path(spark: SparkSession, sf_dir: str, name: str) -> str:
     except Exception:
         _relayout_checked[ck] = src
         return src
-    if rows < _RELAYOUT_MIN_ROWS or size // max(groups, 1) <= _RELAYOUT_TASK_BYTES:
+    if (
+        not tag
+        or rows < _RELAYOUT_MIN_ROWS
+        or size // max(groups, 1) <= _RELAYOUT_TASK_BYTES
+    ):
         _relayout_checked[ck] = src
         return src
     n_out = min(n_cpus, max(4, size // _RELAYOUT_FILE_BYTES))
-    tag_dir = f"{scratch_root()}/{scratch_tag(sf_dir, name)}"
+    tag_dir = f"{scratch_root()}/{tag}"
     path = f"{tag_dir}/relayout_{name}"
     if not os.path.exists(path):
         atomic_publish_dir(
@@ -238,6 +249,28 @@ def _relaid_path(spark: SparkSession, sf_dir: str, name: str) -> str:
         _addressed_tags.add(tag_dir)
     _relayout_checked[ck] = path
     return path
+
+
+_SCHEMA_CACHE: dict[tuple[str, str], StructType] = {}
+
+
+def _scan(spark: SparkSession, path: str, fingerprint: str) -> DataFrame:
+    """Parquet scan of ``path`` whose schema is inferred once per
+    ``(path, fingerprint)``: the cold call is a plain ``spark.read.parquet``
+    (schema inference is a Spark job over the footers) and its
+    ``df.schema`` is stored; warm calls read with that schema, so they
+    launch no job and see the same types, nullability and column order.
+    Only the ``StructType`` is kept, never data. An empty ``fingerprint``
+    (no content fingerprint available) is never memoized. Threads racing
+    on a cold key each infer and store the same schema, so no lock."""
+    key = (path, fingerprint)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if fingerprint:
+        _SCHEMA_CACHE[key] = df.schema
+    return df
 
 
 _COUNT_CACHE: dict[tuple[str, str], int] = {}
@@ -410,7 +443,9 @@ def published_parquet(
         _addressed_tags.add(f"{root}/{tag}")
         _addressed_tags.add(path)  # periodic re-touch covers the subdir
         _prune_stale_tags(sf_dir)
-    return spark.read.parquet(path)
+    # a published dir is immutable once renamed into place, and its path
+    # already carries the source fingerprint and the artifact parameters
+    return _scan(spark, path, tag)
 
 
 def _reap_superseded_names(tag_dir: str, family: str, keep: str) -> None:
@@ -558,9 +593,22 @@ def _prune_stale_tags(sf_dir: str) -> None:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table (columnar parquet; Catalyst prunes/pushes)."""
+    """Scan one fixture table (columnar parquet; Catalyst prunes/pushes).
+
+    The source's content fingerprint (:func:`scratch_tag`) is computed
+    once per call and keys both the re-layout decision and the schema
+    memo (:func:`_scan`): the first call for a (scan path, fingerprint)
+    infers the parquet schema, later calls reuse that ``StructType`` and
+    launch no Spark job. Regenerating the fixture changes its size or
+    mtime, hence the fingerprint, so the schema is inferred afresh. Only
+    the schema is memoized; data is never cached. The confs that shape
+    inference are pinned before the first read."""
     _ensure_engine_confs(spark)
-    df = spark.read.parquet(_relaid_path(spark, sf_dir, name))
+    try:
+        tag = scratch_tag(sf_dir, name)
+    except OSError:
+        tag = ""
+    df = _scan(spark, _relaid_path(spark, sf_dir, name, tag), tag)
     if name == "events":
         # Fixture generations have stored ts as TIMESTAMP(NANOS) (read as
         # long via nanosAsLong → truncate to micros) or TIMESTAMP_NTZ
