@@ -35,7 +35,7 @@ proves stream-total equals the batch union of the per-step feeds).
 
 Worker-side reads use pyarrow + pandas directly (a Python DataSource
 partition read runs without a SparkSession); the per-bucket frames are
-bounded by bucket sizing exactly as cdc_merge_batch's are.
+bounded by the table's bucket count (``kbucket=N`` sizing).
 """
 
 from __future__ import annotations

@@ -41,6 +41,7 @@ from kinesis_datastore_app_spark.registry import register
 # names.
 from kinesis_datastore_app_spark.txnlog import (
     BatchAlreadyApplied as _BatchAlreadyApplied,
+    PendingDeleteVectors,
     sink_batch_hwm as _sink_batch_hwm,
 )
 from kinesis_datastore_app_spark.streaming.source_factory import (
@@ -725,185 +726,13 @@ FROM latest l JOIN counts c USING (user_id)
 """
 
 
-CDC_N_BUCKETS = 16
-
-
-def _cdc_recover(state: str) -> None:
-    """Finish or roll back any bucket publish a crash interrupted.
-
-    A bucket's publish (cdc_merge_batch step 4) is two renames — current
-    moves aside to the batch's trash dir, then staging renames in. A
-    crash between them leaves the bucket with ZERO live copies, but both
-    halves survive on disk: the old copy in ``state.trash-batch-{bid}``
-    and the new copy (marker already written) in
-    ``state.staging-batch-{bid}``. foreachBatch redelivers the failed
-    batch on restart, so running recovery first restores the one-live-
-    copy invariant every later step relies on: prefer completing the
-    publish (the staged copy exists with its ``_last_batch`` marker, so
-    ``_applied`` then correctly skips the bucket), else restore the old
-    copy and let the redelivered batch re-merge it. Leftover trash and
-    staging dirs are then GC'd (interrupted-overwrite staging leftovers
-    are rewritten by the redelivery's ``mode("overwrite")``).
-    """
-    import glob
-    import os
-    import shutil
-
-    for trash in glob.glob(glob.escape(state) + ".trash-batch-*"):
-        staging = f"{state}.staging-batch-{trash.rsplit('-', 1)[1]}"
-        for entry in os.listdir(trash):  # entries are 'bucket=B' dirs
-            cur = f"{state}/{entry}"
-            if os.path.exists(cur):
-                continue
-            staged = f"{staging}/{entry}"
-            if os.path.exists(f"{staged}/_last_batch"):
-                os.rename(staged, cur)
-            else:
-                os.rename(f"{trash}/{entry}", cur)
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-
-
-def cdc_merge_batch(
-    state: str, batch_df: DataFrame, batch_id: int, n_buckets: int = CDC_N_BUCKETS
-) -> None:
-    """MERGE one micro-batch of events into a hash-bucketed snapshot.
-
-    The snapshot lives as ``state/bucket=B/`` parquet dirs (B =
-    pmod(hash(user_id), n_buckets)). Per batch:
-
-    1. aggregate the batch to one delta row per key (map-side partial
-       agg, one keyed exchange);
-    2. read ONLY the buckets the delta touches (partition-pruned scan —
-       untouched buckets are never read, let alone rewritten; per-batch
-       I/O is O(delta buckets), not O(total state));
-    3. re-reduce with associative combiners (additive count,
-       (ts, event_id)-argmax last-writer-wins) and write the merged
-       buckets in one job to a batch-id staging dir;
-    4. publish each touched bucket by rename: current moves aside to the
-       batch's deterministically-named trash dir, then staging renames
-       in. A crash at any point leaves the old copy, the new copy, or
-       BOTH halves recoverable on disk (trash + marker-carrying
-       staging); the recovery pass (_cdc_recover) that opens every batch
-       completes or rolls back an interrupted publish before anything is
-       read, so the snapshot never serves a lost bucket;
-    5. a ``_last_batch`` marker inside each bucket dir makes retries
-       idempotent: a re-delivered batch skips buckets that already
-       absorbed it (foreachBatch's at-least-once → exactly-once, same
-       guarantee stream_foreach_batch stages by batch id for).
-
-    The only driver-side collect is the ≤ n_buckets-int distinct-bucket
-    list. A MERGE-capable table format (Delta/Iceberg) replaces step
-    3-5 with a row-level MERGE; the dataflow above is unchanged.
-    """
-    from kinesis_datastore_app_spark.txnlog import WriterLease
-
-    # The bucket publish mutates state IN PLACE (rename-aside + rename-in),
-    # which is a SINGLE-writer protocol: a second concurrent merger would
-    # interleave renames into silent last-write-wins corruption. The lease
-    # makes that assumption enforced — a racing writer fails loudly at
-    # acquire, and a crashed holder's lease expires by heartbeat age so
-    # the foreachBatch redelivery path recovers unattended. Multi-writer
-    # tables use the copy-on-write OCC snapshot (txnlog.commit_snapshot)
-    # instead; see SCALE.md "Concurrency model".
-    with WriterLease(state):
-        _merge_batch_locked(state, batch_df, batch_id, n_buckets)
-
-
-def _merge_batch_locked(
-    state: str, batch_df: DataFrame, batch_id: int, n_buckets: int
-) -> None:
-    _cdc_recover(state)
-    sess = batch_df.sparkSession
-    delta = (
-        batch_df.withColumn(
-            "bucket", F.pmod(F.hash(F.col("user_id")), F.lit(n_buckets))
-        )
-        .groupBy("bucket", "user_id")
-        .agg(
-            F.max_by(
-                F.col("event_type"), F.struct(F.col("ts"), F.col("event_id"))
-            ).alias("last_status"),
-            F.max(F.struct("ts", "event_id")).alias("_last_key"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    # NOT persisted, deliberately (measured r13): the delta is read
-    # twice (distinct-bucket collect + staged write), but caching it
-    # costs more than the saved recompute here — materializing the
-    # cache runs the full un-coalesced exchange eagerly and converts to
-    # the in-memory columnar format, net +70% on the key (3.2 s → 5.5 s)
-    # for a batch whose recompute is one cheap file scan + partial agg.
-    # Contrast txnlog_apply_feed_batch, where the recompute is a Python
-    # connector diff and the cache wins 2×.
-    _merge_batch_delta(sess, state, delta, batch_id, n_buckets)
-
-
-def _merge_batch_delta(sess, state, delta, batch_id, n_buckets):
-    import os
-    import shutil
-
-    affected = sorted(
-        r["bucket"] for r in delta.select("bucket").distinct().collect()
-    )
-    if not affected:
-        return
-    # Retry idempotence: drop buckets that already absorbed this batch.
-    def _applied(b: int) -> int:
-        try:
-            with open(f"{state}/bucket={b}/_last_batch") as fh:
-                return int(fh.read())
-        except (OSError, ValueError):
-            return -1
-
-    affected = [b for b in affected if _applied(b) < batch_id]
-    if not affected:
-        return
-    delta = delta.filter(F.col("bucket").isin([int(b) for b in affected]))
-    prev_dirs = [
-        f"{state}/bucket={b}"
-        for b in affected
-        if os.path.exists(f"{state}/bucket={b}")
-    ]
-    if prev_dirs:
-        prev = sess.read.option("basePath", state).parquet(*prev_dirs)
-        delta = (
-            prev.unionByName(delta)
-            .groupBy("bucket", "user_id")
-            .agg(
-                F.max_by("last_status", "_last_key").alias("last_status"),
-                F.max("_last_key").alias("_last_key"),
-                F.sum("n_events").alias("n_events"),
-            )
-        )
-    staging = f"{state}.staging-batch-{batch_id}"
-    delta.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    trash = f"{state}.trash-batch-{batch_id}"
-    os.makedirs(trash, exist_ok=True)
-    os.makedirs(state, exist_ok=True)
-    for b in affected:
-        new_b = f"{staging}/bucket={b}"
-        if not os.path.exists(new_b):  # no rows landed in this bucket
-            continue
-        with open(f"{new_b}/_last_batch", "w") as fh:
-            fh.write(str(batch_id))
-        cur_b = f"{state}/bucket={b}"
-        if os.path.exists(cur_b):
-            os.rename(cur_b, f"{trash}/bucket={b}")
-        os.rename(new_b, cur_b)
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-
-
 def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
     """Commit ONE micro-batch as a txnlog version — the Delta
     streaming-sink contract (round-10 verdict item 1), composing the
-    engine's own pieces: the per-batch associative merge of
-    cdc_merge_batch, the copy-on-write snapshot discipline of
-    txnlog.commit_snapshot, and the batch-id idempotence of
-    stream_foreach_batch. The batch id is recorded IN the version
+    engine's own pieces: a per-batch associative merge (additive count,
+    (ts, event_id)-argmax last-writer-wins), the copy-on-write snapshot
+    discipline of txnlog.commit_snapshot, and the batch-id idempotence
+    of stream_foreach_batch. The batch id is recorded IN the version
     payload, so exactly-once lands structurally:
 
     * foreachBatch delivers batches at-least-once with monotonically
@@ -912,11 +741,14 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
       kill/restart can never double-commit a version (the engine-side
       completion of A7's keyed-put story, KinesisSync.java:145-169);
     * the snapshot dir is written complete BEFORE the CAS publish, so
-      a crash at any point leaves the prior version live and at most
-      one unreferenced loser dir (vacuum's orphan sweep collects it);
+      a crash before the version file lands leaves the prior version
+      live and at most one unreferenced loser dir (vacuum's orphan
+      sweep collects it); once it lands, the redelivery skips it;
     * because the check rides INSIDE occ_commit's apply, it re-runs on
       every CAS retry — two racing redeliveries of the same batch
-      serialize, and the loser sees the winner's batch id and stops.
+      serialize, and the loser sees the winner's batch id and stops;
+      a foreign commit between the read and the CAS makes the sink
+      rebase onto it — multi-writer safety comes from the CAS alone.
 
     Downstream, the table is a first-class txnlog citizen: time-travel
     reads per micro-batch version, cdc.read_table_changes between any
@@ -924,10 +756,10 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
     vacuum for retention.
 
     At 100 TB: per-batch cost is one keyed shuffle of the BATCH plus a
-    copy-on-write rewrite of the merged state — the same profile as
-    cdc_merge_batch, with the bucket-pruning variant (partition the
-    snapshot by key range and rewrite only touched partitions) the
-    natural next sizing step; the log itself stays O(commits) JSON."""
+    copy-on-write rewrite of the merged state, with the bucket-manifest
+    partial commit (cdc.partial_bucket_payload: rewrite only touched
+    buckets) the natural next sizing step once it is no slower at
+    fixture scale; the log itself stays O(commits) JSON."""
     import os
     import uuid
 
@@ -951,7 +783,7 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
             # without 'deletes' — it would silently resurrect purged
             # rows. A DV'd sink table must be compacted first
             # (commit_snapshot's mor_merge_fn applies the vectors).
-            raise ValueError(
+            raise PendingDeleteVectors(
                 f"table at {root} carries pending deletion vectors; "
                 "compact them (mor_merge_fn) before streaming more batches"
             )
@@ -999,21 +831,27 @@ def _txnlog_stream_ingest(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
-# Same per-key contract as stream_cdc_merge — deliberately ONE oracle
-# string for both: the two sinks differ in durability story (in-place
-# bucket publish under a lease vs versioned COW commits), not in what
-# they compute, and sharing the SQL pins that equivalence.
+# Two keys, one body: stream_cdc_merge (the streaming form of
+# maintenance_upsert) and stream_txnlog_sink (streaming writes into the
+# log) compute the same per-key rollup through the same sink, so they
+# share one oracle string and one function.
+@register("stream_cdc_merge", oracle=_CDC_MERGE_ORACLE)
 @register("stream_txnlog_sink", oracle=_CDC_MERGE_ORACLE)
 def stream_txnlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming writes INTO the transaction log: each micro-batch of
-    the replayed event stream becomes one txnlog version (see
-    txnlog_sink_batch), and the result is read back as a TIME-TRAVEL
-    read of the latest version — so the full lakehouse read surface
-    (read_version, cdc.read_table_changes, vacuum) works over a
-    streaming-written table. Batch-id idempotence in the version
-    payload makes restart redelivery a no-op; the kill/restart test in
-    tests/test_txnlog.py proves version count and CDF output identical
-    to an uninterrupted run."""
+    """Streaming CDC apply into the transaction log: each micro-batch of
+    the replayed event stream is MERGED into the keyed snapshot and
+    committed as one txnlog version (see txnlog_sink_batch), and the
+    result is read back as a TIME-TRAVEL read of the latest version —
+    so the full lakehouse read surface (read_version,
+    cdc.read_table_changes, vacuum) works over a streaming-written
+    table. Because every combiner is associative+commutative, the final
+    snapshot is independent of how the stream was chopped into batches,
+    which is why the oracle is plain per-key SQL over all events.
+    Batch-id idempotence in the version payload makes restart
+    redelivery a no-op; the kill/restart test in tests/test_txnlog.py
+    proves version count and CDF output identical to an uninterrupted
+    run for a kill before the CAS, inside it before the version file is
+    linked, and after the link lands."""
     from kinesis_datastore_app_spark.txnlog import read_latest, snapshot_path
 
     root = _txnlog_stream_ingest(spark, sf_dir)
@@ -1233,47 +1071,6 @@ def stream_cdf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rollup.filter(F.col("n_users") > 0)
 
 
-@register("stream_cdc_merge", oracle=_CDC_MERGE_ORACLE)
-def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC apply: each micro-batch of the event stream is
-    MERGED into a keyed, hash-bucketed snapshot via foreachBatch — the
-    streaming form of maintenance_upsert, and the materialized-view
-    pattern for keeping a serving table current from a change stream
-    (see cdc_merge_batch for the bucket/staging/publish mechanics).
-    Because every combiner is associative+commutative, the final
-    snapshot is independent of how the stream was chopped into batches —
-    which is exactly what makes a streaming upsert pipeline testable
-    against a batch oracle, and why the oracle is plain per-key SQL over
-    all events.
-
-    Scale notes: per-batch I/O is proportional to the buckets the
-    batch's keys touch, not total snapshot size — the property that
-    survives 100× state growth. Bucket count is the knob: size it so
-    one bucket ≪ executor memory at the target scale."""
-    from kinesis_datastore_app_spark.tmpdirs import scratch_tmpdir
-
-    s = events_stream(spark, sf_dir, files=3, max_files_per_trigger=1)
-    root = scratch_tmpdir("kdas_cdc_")
-    state = f"{root}/state"
-
-    q = (
-        s.writeStream.foreachBatch(
-            lambda df, bid: cdc_merge_batch(state, df, bid)
-        )
-        .option("checkpointLocation", scratch_tmpdir("kdas_cdc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(state).select(
-        "user_id",
-        "last_status",
-        F.col("_last_key.ts").alias("last_ts"),
-        "n_events",
-    )
-
-
-
 # ---------------------------------------------------------------------------
 # Round 12: the end-to-end streaming CDF pipeline (verdict item 3) —
 # readStream from one table's change feed, apply_feed in foreachBatch,
@@ -1400,10 +1197,6 @@ def _apply_feed_batch_persisted(
         if _sink_batch_hwm(root, prev, prev_v) >= batch_id:
             raise _BatchAlreadyApplied
         if prev is not None and prev.get("deletes"):
-            from kinesis_datastore_app_spark.txnlog import (
-                PendingDeleteVectors,
-            )
-
             # the partial payload would drop the deletes list, silently
             # resurrecting purged rows in carried buckets — same guard
             # class as commit_snapshot's plain merge_fn

@@ -1,7 +1,7 @@
 """Optimistic-concurrency transaction log for file-published tables.
 
 The engine's sinks publish results as immutable files plus a pointer
-(the keyed sink's manifest, the CDC snapshot's bucket dirs). Single
+(the keyed sink's manifest, the streaming sink's snapshot dirs). Single
 writers get crash-atomicity from staged-write + rename; what was missing
 (round-7 verdict, "What's missing" #2) is a story for TWO writers racing
 the same table — a streaming ingester and a batch compactor hit this
@@ -328,7 +328,7 @@ def vacuum(
     # Orphan sweep: any subdirectory of root that no SURVIVING version
     # file references and that is older than the grace window. Re-list
     # versions (the drop loop above just shrank the log); skip the log
-    # dir and dot/underscore-prefixed infrastructure (lease files are
+    # dir and dot/underscore-prefixed infrastructure (marker files are
     # plain files, but stay conservative about prefixes).
     #
     # GUARDED by payload shape (round-10 review; scheme now detected
@@ -686,8 +686,8 @@ def version_at(root: str, ts: float) -> int:
 # snapshot. Each version's payload names an immutable snapshot dir; a
 # writer merges its delta against the snapshot it read, writes a NEW
 # uniquely-named snapshot dir, and commits the pointer. Losers rebase by
-# re-merging against the winner's snapshot. This is the multi-writer
-# counterpart of cdc_merge_batch's single-writer in-place bucket publish.
+# re-merging against the winner's snapshot. Streaming MERGE commits
+# through the same discipline (streaming.queries.txnlog_sink_batch).
 # ---------------------------------------------------------------------------
 
 
@@ -1378,184 +1378,3 @@ def pruned_version_files(
     all_files = _walk_parquet_rel(snap)
     chosen = [os.path.join(snap, f) for f in all_files if keep(f)]
     return chosen, len(all_files)
-
-
-# ---------------------------------------------------------------------------
-# Single-writer lease: for publish paths that mutate state IN PLACE
-# (cdc_merge_batch's bucket renames), multi-writer safety comes not from
-# OCC but from making the single-writer assumption explicit and ENFORCED:
-# a second writer fails loudly at acquire time instead of silently
-# interleaving renames (last-write-wins corruption). A crashed holder's
-# lease expires by heartbeat age, so recovery doesn't need manual unlock.
-# ---------------------------------------------------------------------------
-
-
-class LeaseHeld(Exception):
-    """Another live writer holds the lease on this table."""
-
-
-class WriterLease:
-    """Heartbeat-expiring exclusive writer lease (O_EXCL lock file).
-
-    Liveness is a background daemon thread touching the lock file every
-    ttl/3 while held — so (a) a holder may run arbitrarily long (a
-    100 TB merge batch easily exceeds any fixed TTL; the hold itself
-    keeps the lease alive), and (b) the TTL can be SHORT: after a hard
-    crash (no heartbeat) a redelivered batch waits at most ttl_s before
-    breaking the lease and recovering unattended."""
-
-    def __init__(self, root: str, ttl_s: float = 60.0):
-        self.path = os.path.join(root, "_WRITER_LEASE")
-        self.ttl_s = ttl_s
-        self.token = uuid.uuid4().hex
-        self._hb_stop = None
-        self._hb_thread = None
-
-    def acquire(self) -> "WriterLease":
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        try:
-            fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            import time
-
-            try:
-                age = time.time() - os.stat(self.path).st_mtime
-            except FileNotFoundError:
-                # racing holder released between our failed O_EXCL and
-                # the stat — the lease is free NOW, take it
-                return self.acquire()
-            except OSError:
-                raise LeaseHeld(f"lease unreadable at {self.path}") from None
-            if age <= self.ttl_s:
-                raise LeaseHeld(f"live writer lease at {self.path}")
-            # stale (crashed holder, heartbeat expired): break it with a
-            # rename-claim so exactly one breaker wins. Re-stat right
-            # before the rename — a reviving holder's delayed heartbeat
-            # may have touched the file since the first stat, in which
-            # case the lease is live again and must not be broken.
-            # RESIDUAL RACE (documented, inherent to unfenced mtime
-            # leases): a heartbeat landing between this re-stat and the
-            # rename still loses its lease. The window is two syscalls
-            # wide; it only opens after the holder ALREADY let the lease
-            # sit un-beaten past a full TTL, so size ttl_s >> the
-            # worst-case heartbeat-thread stall (GC pause, CPU
-            # starvation) — the 60 s default is 180x the beat interval.
-            try:
-                if time.time() - os.stat(self.path).st_mtime <= self.ttl_s:
-                    raise LeaseHeld(f"lease revived at {self.path}")
-                claim = f"{self.path}.claim-{self.token}"
-                os.rename(self.path, claim)
-                os.unlink(claim)
-            except LeaseHeld:
-                raise
-            except OSError:
-                raise LeaseHeld(f"lease contended at {self.path}") from None
-            return self.acquire()
-        with os.fdopen(fd, "w") as f:
-            f.write(self.token)
-        self._start_heartbeat()
-        return self
-
-    def _start_heartbeat(self) -> None:
-        import threading
-
-        self._hb_stop = threading.Event()
-
-        def beat(stop, path, interval, token):
-            # Touch only OUR lease: verify the token before each utime.
-            # A transiently missing file is NOT a stop signal — release()
-            # of a stale ex-holder briefly renames the live file aside
-            # before linking it back (see release), and exiting on that
-            # first OSError left the live holder heartbeat-less forever
-            # (round-8 ADVICE, medium). Retry a few short sleeps; stop
-            # only when the file is persistently gone or owned by someone
-            # else (we really were broken).
-            misses = 0
-            while not stop.wait(interval if misses == 0 else 0.05):
-                try:
-                    with open(path) as f:
-                        if f.read() != token:
-                            return  # broken + reacquired by another writer
-                    os.utime(path)
-                    misses = 0
-                except OSError:
-                    misses += 1
-                    if misses > 3:
-                        return  # persistently gone: lease really broken
-
-        self._hb_thread = threading.Thread(
-            target=beat,
-            args=(self._hb_stop, self.path, max(self.ttl_s / 3.0, 0.05), self.token),
-            daemon=True,
-        )
-        self._hb_thread.start()
-
-    def heartbeat(self) -> None:
-        """Manual touch between batches of very long holds. Token-checked
-        like the background beat (round-10 review: an unconditional utime
-        from an expired ex-holder would keep refreshing the NEW holder's
-        lock file — after that holder crashes, every acquire() sees a
-        forever-fresh lease and the table livelocks with no unattended
-        recovery). Same residual two-syscall read→utime window as
-        acquire()'s documented break race — it only opens after OUR
-        lease already sat un-beaten past a full TTL, so ttl_s sizing
-        covers it."""
-        try:
-            with open(self.path) as f:
-                if f.read() != self.token:
-                    return  # broken + reacquired: not ours to refresh
-            os.utime(self.path)
-        except OSError:
-            pass
-
-    def release(self) -> None:
-        if self._hb_stop is not None:
-            self._hb_stop.set()
-            self._hb_thread.join(timeout=5)
-        # Read the token FIRST and return without touching the file when
-        # it is not ours (round-8 ADVICE, medium): the old rename-first
-        # release took the CURRENT holder's live file aside — during
-        # that window the live holder's heartbeat missed the file and a
-        # third writer's O_EXCL could land before the link-back. Reading
-        # first makes the common paths touch-free; the read→rename race
-        # below only exists if OUR lease already expired un-beaten
-        # (heartbeating holders are never broken), so a live holder's
-        # release is race-free.
-        try:
-            with open(self.path) as f:
-                if f.read() != self.token:
-                    return  # broken + reacquired: not ours to release
-        except OSError:
-            return  # already broken+released by someone else
-        # Ours at read time. Claim-by-rename before unlink so that if a
-        # breaker replaced the file between the read and here (possible
-        # only for an expired ex-holder), we detect it and restore.
-        claim = f"{self.path}.rel-{self.token}"
-        try:
-            os.rename(self.path, claim)
-        except OSError:
-            return
-        try:
-            with open(claim) as f:
-                mine = f.read() == self.token
-        except OSError:
-            mine = False
-        if not mine:
-            # the file we claimed belongs to a newer holder — put it
-            # back with link (fails if a third writer acquired in the
-            # window, in which case that newer acquisition stands;
-            # never clobber a live lock with rename)
-            try:
-                os.link(claim, self.path)
-            except OSError:
-                pass
-        try:
-            os.unlink(claim)
-        except OSError:
-            pass
-
-    def __enter__(self) -> "WriterLease":
-        return self.acquire()
-
-    def __exit__(self, *exc) -> None:
-        self.release()

@@ -568,145 +568,6 @@ def test_no_global_window_over_unbounded_input(spark):
     assert not offenders, f"global unpartitioned Window in: {offenders}"
 
 
-def test_cdc_merge_leaves_untouched_buckets_byte_identical(spark, tmp_path):
-    """Applying a batch whose keys miss a bucket must not rewrite that
-    bucket: per-batch I/O is O(touched buckets), and an untouched
-    bucket's files stay byte-for-byte identical (same names, same
-    bytes). Also proves retry idempotence: re-delivering the same batch
-    id changes nothing (no double-counted n_events)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kinesis_datastore_app_spark.streaming.queries import cdc_merge_batch
-
-    state = str(tmp_path / "state")
-    nb = 4
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "user_id BIGINT, event_type STRING, ts TIMESTAMP, event_id BIGINT"
-        ).withColumn("ts", F.col("ts"))
-
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    batch1 = mk([(u, "click", t0, u * 10) for u in range(1, 40)])
-    cdc_merge_batch(state, batch1, 0, n_buckets=nb)
-    buckets = {int(d.split("=")[1]) for d in os.listdir(state)}
-    assert len(buckets) > 1  # fixture spans multiple buckets
-
-    # pick a user and a bucket its hash does NOT land in
-    probe = mk([(1, "x", t0, 0)]).select(
-        F.pmod(F.hash(F.col("user_id")), F.lit(nb)).alias("b")
-    ).collect()[0]["b"]
-    untouched = sorted(buckets - {probe})[0]
-
-    def snap(b):
-        d = f"{state}/bucket={b}"
-        return {
-            f: open(os.path.join(d, f), "rb").read()
-            for f in sorted(os.listdir(d))
-        }
-
-    before = snap(untouched)
-    batch2 = mk([(1, "purchase", t0 + dt.timedelta(hours=1), 999)])
-    cdc_merge_batch(state, batch2, 1, n_buckets=nb)
-    assert snap(untouched) == before, "untouched bucket was rewritten"
-
-    # retry of batch 1 (at-least-once redelivery): marker makes it a no-op
-    touched = snap(probe)
-    cdc_merge_batch(state, batch2, 1, n_buckets=nb)
-    assert snap(probe) == touched, "batch retry was not idempotent"
-    n = (
-        spark.read.parquet(state)
-        .filter(F.col("user_id") == 1)
-        .select("n_events")
-        .collect()[0]["n_events"]
-    )
-    assert n == 2  # one from batch1 + one from batch2, no double count
-
-
-def test_cdc_merge_recovers_publish_crash_window(spark, tmp_path):
-    """Kill the publish BETWEEN its two renames (current moved aside,
-    staged copy not yet renamed in) and assert the redelivered batch
-    recovers to the exact same snapshot an uninterrupted run produces.
-    Pre-fix, the crashed bucket had zero live copies and the redelivery
-    rebuilt it from the delta alone — silently dropping all earlier
-    n_events/last_status state."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kinesis_datastore_app_spark.streaming.queries import cdc_merge_batch
-
-    nb = 2
-    t0 = dt.datetime(2024, 1, 1)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "user_id BIGINT, event_type STRING, ts TIMESTAMP, event_id BIGINT"
-        )
-
-    batch0 = mk([(u, "click", t0, u * 10) for u in range(1, 20)])
-    batch1 = mk(
-        [(u, "purchase", t0 + dt.timedelta(hours=1), 1000 + u) for u in range(1, 20)]
-    )
-
-    # uninterrupted twin: the snapshot a crash-free run produces
-    golden = str(tmp_path / "golden")
-    cdc_merge_batch(golden, batch0, 0, n_buckets=nb)
-    cdc_merge_batch(golden, batch1, 1, n_buckets=nb)
-    want = {
-        (r["user_id"], r["last_status"], r["n_events"])
-        for r in spark.read.parquet(golden).collect()
-    }
-    assert {n for (_, _, n) in want} == {2}  # every user saw both batches
-
-    # crashed run: batch 1's publish dies right after current → trash
-    state = str(tmp_path / "state")
-    cdc_merge_batch(state, batch0, 0, n_buckets=nb)
-    real_rename = os.rename
-    trash_prefix = f"{state}.trash-batch-1/"
-
-    def crashing_rename(src, dst):
-        real_rename(src, dst)
-        if dst.startswith(trash_prefix):
-            raise RuntimeError("injected crash between the two publish renames")
-
-    os.rename = crashing_rename
-    try:
-        try:
-            cdc_merge_batch(state, batch1, 1, n_buckets=nb)
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-        else:
-            raise AssertionError("injected crash did not fire")
-    finally:
-        os.rename = real_rename
-
-    # the zero-live-copy window is real: some bucket has no current dir
-    live = {d for d in os.listdir(state) if d.startswith("bucket=")}
-    assert len(live) < nb, "crash window did not leave a missing bucket"
-
-    # foreachBatch redelivers the failed batch; recovery must restore
-    # the bucket before merging, landing on the uninterrupted snapshot
-    cdc_merge_batch(state, batch1, 1, n_buckets=nb)
-    got = {
-        (r["user_id"], r["last_status"], r["n_events"])
-        for r in spark.read.parquet(state).collect()
-    }
-    assert got == want
-    # and the crash's trash/staging leftovers were garbage-collected
-    leftovers = [
-        p
-        for p in os.listdir(tmp_path)
-        if p.startswith("state.trash-") or p.startswith("state.staging-")
-    ]
-    assert not leftovers, f"recovery leaked {leftovers}"
-
-
 def test_bpe_pairs_plan_is_take_ordered(spark):
     """Top-K pair selection must plan as TakeOrderedAndProject (bounded
     per-partition heap + driver merge), never a global sort of the pair
@@ -1122,38 +983,6 @@ def test_custom_stream_restart_exactly_once(spark, tmp_path):
     )
     assert df.count() == n
     assert df.select("shard_id", "seq_no").distinct().count() == n
-
-
-def test_cdc_merge_batch_redelivery_idempotent(spark, tmp_path):
-    """foreachBatch delivers at-least-once: re-applying the SAME batch id
-    must leave the snapshot byte-for-byte identical (the _last_batch
-    marker short-circuits buckets that already absorbed it), and a later
-    batch must still merge on top."""
-    from kinesis_datastore_app_spark.streaming.queries import cdc_merge_batch
-
-    state = str(tmp_path / "state")
-    e = table(spark, SF, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    )
-    b0 = e.filter(F.col("event_id") % 2 == 0)
-    b1 = e.filter(F.col("event_id") % 2 == 1)
-
-    def snap():
-        df = spark.read.parquet(state)
-        return sorted(
-            (r.user_id, r.last_status, r.n_events) for r in df.collect()
-        )
-
-    cdc_merge_batch(state, b0, 0)
-    first = snap()
-    cdc_merge_batch(state, b0, 0)  # re-delivery of the same batch
-    assert snap() == first
-
-    cdc_merge_batch(state, b1, 1)
-    merged = spark.read.parquet(state)
-    total = merged.agg(F.sum("n_events")).collect()[0][0]
-    assert total == e.count()
-    assert merged.select("user_id").distinct().count() == merged.count()
 
 
 def test_keyed_sink_crash_leaves_no_partial_output(spark, tmp_path):

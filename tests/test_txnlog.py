@@ -18,8 +18,6 @@ import pytest
 
 from kinesis_datastore_app_spark.txnlog import (
     CommitConflict,
-    LeaseHeld,
-    WriterLease,
     cas_commit,
     commit_snapshot,
     occ_commit,
@@ -142,24 +140,6 @@ def test_cow_snapshot_interleaved_merge_is_serializable(tmp_path):
     assert final == {1: 10, 2: 25, 3: 7}
 
 
-def test_writer_lease_excludes_live_and_breaks_stale(tmp_path):
-    root = str(tmp_path / "state")
-    lease = WriterLease(root).acquire()
-    with pytest.raises(LeaseHeld):
-        WriterLease(root).acquire()
-    lease.release()
-    # released: next writer proceeds
-    with WriterLease(root):
-        pass
-    # crashed holder: lease file left behind with an expired heartbeat
-    # (stop the live beat first or it would re-touch the backdated file)
-    stale = WriterLease(root, ttl_s=0.0).acquire()
-    stale._hb_stop.set()
-    stale._hb_thread.join(timeout=5)
-    os.utime(stale.path, (0, 0))
-    WriterLease(root, ttl_s=600.0).acquire().release()
-
-
 def test_crash_between_stage_and_commit_stays_invisible(tmp_path):
     """A writer that stages work but dies before its CAS leaves the
     latest version untouched — readers never see the partial job."""
@@ -168,51 +148,6 @@ def test_crash_between_stage_and_commit_stays_invisible(tmp_path):
     # writer 2 "crashes": its staged tmp data exists, no commit happened
     (tmp_path / "t" / "orphan-staged-file").write_text("x")
     assert read_latest(root) == (1, {"files": ["a"]})
-
-
-def test_lease_heartbeat_keeps_long_holds_alive(tmp_path):
-    """Round-8 review finding: a holder running LONGER than the TTL must
-    stay protected (the background heartbeat keeps the lease live), and
-    a genuinely crashed holder must be breakable after ~ttl — not after
-    some multiple of it."""
-    import time
-
-    root = str(tmp_path / "state")
-    lease = WriterLease(root, ttl_s=0.3).acquire()
-    time.sleep(1.0)  # hold for >3x the TTL
-    with pytest.raises(LeaseHeld):
-        WriterLease(root, ttl_s=0.3).acquire()  # still protected
-    lease.release()
-    # crash: a holder that never heartbeats again (simulated by killing
-    # the beat and backdating) is breakable by the next writer
-    dead = WriterLease(root, ttl_s=0.3).acquire()
-    dead._hb_stop.set()
-    dead._hb_thread.join(timeout=5)
-    time.sleep(0.4)
-    WriterLease(root, ttl_s=0.3).acquire().release()
-
-
-def test_lease_acquire_retries_when_holder_releases_mid_race(tmp_path, monkeypatch):
-    """A release landing between a loser's failed O_EXCL and its stat
-    must read as 'free now' (retry wins), not a spurious LeaseHeld."""
-    root = str(tmp_path / "state")
-    holder = WriterLease(root).acquire()
-    contender = WriterLease(root)
-
-    real_stat = os.stat
-    released = []
-
-    def stat_after_release(path, *a, **kw):
-        if path == contender.path and not released:
-            holder.release()
-            released.append(True)
-            raise FileNotFoundError(path)
-        return real_stat(path, *a, **kw)
-
-    monkeypatch.setattr(os, "stat", stat_after_release)
-    contender.acquire()  # must succeed via retry, not raise LeaseHeld
-    monkeypatch.undo()
-    contender.release()
 
 
 def test_touch_refreshes_superseded_vintages(tmp_path, monkeypatch):
@@ -322,111 +257,6 @@ def test_vacuum_keeps_snapshot_shared_with_retained_version(tmp_path):
     assert dropped == [1, 2] and removed == []
     assert os.path.exists(snap)
     assert read_version(root, 3)["snapshot"] == "snap-shared"
-
-
-def test_release_by_expired_ex_holder_never_touches_live_lease(tmp_path):
-    """Round-8 ADVICE (medium): an ex-holder whose lease expired and was
-    broken must release as a NO-OP — the live holder's file is never
-    renamed aside (its heartbeat keeps running) and a third writer
-    cannot sneak in through a release window."""
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    stale = WriterLease(root, ttl_s=0.2)
-    stale.acquire()
-    stale._hb_stop.set()  # simulate a stalled holder: heartbeat dies
-    stale._hb_thread.join()
-    import time
-
-    time.sleep(0.3)  # let the lease expire un-beaten
-    live = WriterLease(root, ttl_s=0.2).acquire()  # breaks the stale lease
-    try:
-        live_mtime = os.stat(live.path).st_mtime
-        stale.release()  # expired ex-holder: must not touch the file
-        assert os.path.exists(live.path), "live lease renamed aside by ex-holder"
-        with open(live.path) as f:
-            assert f.read() == live.token
-        # and a fresh acquire still sees the LIVE lease (no window opened)
-        with pytest.raises(LeaseHeld):
-            WriterLease(root, ttl_s=60.0).acquire()
-        assert os.stat(live.path).st_mtime >= live_mtime
-    finally:
-        live.release()
-    assert not os.path.exists(live.path)
-
-
-def test_heartbeat_survives_transient_file_blip(tmp_path):
-    """Round-8 ADVICE (medium, second half): the heartbeat must retry a
-    transiently missing lease file (the release link-back window)
-    instead of exiting permanently on the first OSError — and must STOP
-    (not adopt) when the file belongs to another writer."""
-    import time
-
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    lease = WriterLease(root, ttl_s=0.6).acquire()
-    try:
-        # transient blip: file vanishes briefly, then comes back
-        aside = lease.path + ".blip"
-        os.rename(lease.path, aside)
-        time.sleep(0.3)  # a beat or two hits the missing file
-        os.rename(aside, lease.path)
-        old = os.stat(lease.path).st_mtime
-        deadline = time.time() + 3
-        while time.time() < deadline and os.stat(lease.path).st_mtime <= old:
-            time.sleep(0.05)
-        assert os.stat(lease.path).st_mtime > old, (
-            "heartbeat died on the transient blip"
-        )
-        assert lease._hb_thread.is_alive()
-        # ownership change: heartbeat must stop, not refresh a foreign lease
-        with open(lease.path, "w") as f:
-            f.write("someone-else")
-        lease._hb_thread.join(timeout=3)
-        assert not lease._hb_thread.is_alive(), (
-            "heartbeat kept touching a lease it no longer owns"
-        )
-    finally:
-        lease.release()
-    # release was a no-op on the foreign lease
-    with open(lease.path) as f:
-        assert f.read() == "someone-else"
-
-
-def test_stale_break_restat_spares_revived_lease(tmp_path):
-    """Round-8 ADVICE (low): the breaker re-stats immediately before the
-    rename — a lease revived (touched) after the first stat must raise
-    LeaseHeld instead of being broken."""
-    import time
-
-    root = str(tmp_path / "t")
-    os.makedirs(root)
-    holder = WriterLease(root, ttl_s=0.2)
-    holder.acquire()
-    holder._hb_stop.set()
-    holder._hb_thread.join()
-    time.sleep(0.3)  # expired by age
-
-    breaker = WriterLease(root, ttl_s=0.2)
-    real_stat = os.stat
-    calls = {"n": 0}
-
-    def stat_with_revival(path, *a, **kw):
-        st = real_stat(path, *a, **kw)
-        if path == breaker.path:
-            calls["n"] += 1
-            if calls["n"] == 2:
-                # delayed heartbeat lands between first stat and re-stat
-                os.utime(path)
-                return real_stat(path, *a, **kw)
-        return st
-
-    import unittest.mock as mock
-
-    with mock.patch("os.stat", side_effect=stat_with_revival):
-        with pytest.raises(LeaseHeld, match="revived|live"):
-            breaker.acquire()
-    with open(holder.path) as f:
-        assert f.read() == holder.token, "revived lease was broken anyway"
 
 
 def test_vacuum_reports_shared_dropped_snapshot_once(tmp_path):
@@ -730,36 +560,6 @@ def test_vacuum_collects_aged_txn_tmp_files(tmp_path):
     assert os.path.exists(fresh), "in-flight commit's tmp swept inside grace"
 
 
-def test_manual_heartbeat_is_token_checked(tmp_path):
-    """Round-10 review: heartbeat() must refresh only OUR lease — an
-    expired ex-holder's unconditional utime would keep a NEW holder's
-    lock file forever fresh, and after that holder crashes every
-    acquire() sees a live lease: permanent livelock."""
-    import time
-
-    root = str(tmp_path / "hb")
-    lease = WriterLease(root, ttl_s=60.0)
-    lease.acquire()
-    try:
-        # broken + reacquired by another writer: foreign token in place
-        with open(lease.path, "w") as f:
-            f.write("someone-else")
-        past = time.time() - 120
-        os.utime(lease.path, (past, past))
-        lease.heartbeat()
-        assert os.stat(lease.path).st_mtime == pytest.approx(past), (
-            "heartbeat refreshed a lease it does not hold"
-        )
-        # restore our token: now the touch must land
-        with open(lease.path, "w") as f:
-            f.write(lease.token)
-        os.utime(lease.path, (past, past))
-        lease.heartbeat()
-        assert os.stat(lease.path).st_mtime > past + 60
-    finally:
-        lease.release()
-
-
 def test_vacuum_skips_sweep_on_empty_log_table(tmp_path):
     """Round-10 self-diff review: zero committed versions = nothing to
     classify the payload scheme by, so the orphan sweep must not run —
@@ -789,11 +589,23 @@ def test_vacuum_skips_sweep_on_empty_log_table(tmp_path):
 def test_txnlog_sink_kill_restart_exactly_once(tmp_path, spark, monkeypatch):
     """Round-11 (r10 verdict item 1 "done" criterion): the same
     micro-batch sequence into two roots — uninterrupted vs hard-killed
-    between the snapshot write and the CAS publish, then restarted with
-    foreachBatch's at-least-once redelivery (including a DOUBLE
-    redelivery) — must produce an identical version list, final state,
-    and CDF output. Batch-id idempotence in the version payload is what
-    makes the redelivery a no-op."""
+    mid-commit, then restarted with foreachBatch's at-least-once
+    redelivery (including a DOUBLE redelivery) — must produce an
+    identical version list, final state, and CDF output. Batch-id
+    idempotence in the version payload is what makes the redelivery a
+    no-op. Three crash points of the commit are covered:
+
+    * ``before_cas``: killed between the snapshot write and the CAS;
+    * ``before_link``: killed inside cas_commit after the tmp payload is
+      written and fsynced, before ``os.link`` publishes it;
+    * ``after_link``: killed after ``os.link`` landed the version but
+      before cas_commit returns — the commit is durable, so the
+      redelivery must find its batch id in the log and do nothing.
+
+    The crash points share one uninterrupted twin, so they loop in one
+    test rather than rebuilding the twin per parameter."""
+    import json
+
     from pyspark.sql import functions as F
 
     from kinesis_datastore_app_spark import txnlog
@@ -806,39 +618,12 @@ def test_txnlog_sink_kill_restart_exactly_once(tmp_path, spark, monkeypatch):
         e.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)
     ]
 
-    a = str(tmp_path / "a")
-    for i, b in enumerate(batches):
-        txnlog_sink_batch(a, b, i)
-
-    b_root = str(tmp_path / "b")
-    txnlog_sink_batch(b_root, batches[0], 0)
-    real_cas = txnlog.cas_commit
-
-    def crashing_cas(root, version, payload):
-        raise RuntimeError("simulated kill before CAS")
-
-    monkeypatch.setattr(txnlog, "cas_commit", crashing_cas)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        txnlog_sink_batch(b_root, batches[1], 1)
-    monkeypatch.setattr(txnlog, "cas_commit", real_cas)
-    # restart: the failed batch is redelivered — twice, to prove the
-    # second delivery is a structural no-op, not luck
-    txnlog_sink_batch(b_root, batches[1], 1)
-    txnlog_sink_batch(b_root, batches[1], 1)
-    txnlog_sink_batch(b_root, batches[2], 2)
-
-    assert txnlog.list_versions(a) == txnlog.list_versions(b_root) == [1, 2, 3]
-    for v, expect_bid in ((1, 0), (2, 1), (3, 2)):
-        assert txnlog.read_version(b_root, v)["batch_id"] == expect_bid
-
     def final(r):
         snap = txnlog.snapshot_path(r, txnlog.read_latest(r)[1])
         df = spark.read.parquet(snap).select(
             "user_id", "last_status", "n_events"
         )
         return sorted(map(tuple, df.collect()))
-
-    assert final(a) == final(b_root)
 
     def feed(r):
         d = read_table_changes(
@@ -850,7 +635,179 @@ def test_txnlog_sink_kill_restart_exactly_once(tmp_path, spark, monkeypatch):
             for t in d[cols].itertuples(index=False, name=None)
         )
 
-    assert feed(a) == feed(b_root), "CDF over the restarted table diverged"
+    a = str(tmp_path / "a")
+    for i, b in enumerate(batches):
+        txnlog_sink_batch(a, b, i)
+    assert txnlog.list_versions(a) == [1, 2, 3]
+    want_final, want_feed = final(a), feed(a)
+
+    real_link = os.link
+
+    def kill_before_cas(root, version, payload):
+        raise RuntimeError("simulated kill before CAS")
+
+    def kill_in_link(landed):
+        def link(src, dst, *args, **kwargs):
+            if os.path.basename(os.path.dirname(dst)) != "_txn":
+                return real_link(src, dst, *args, **kwargs)
+            # the tmp payload is complete on disk before the link
+            with open(src) as f:
+                assert json.load(f)["batch_id"] == 1
+            if landed:
+                real_link(src, dst, *args, **kwargs)
+            raise RuntimeError("simulated kill inside cas_commit")
+
+        return link
+
+    crash_points = {
+        "before_cas": (txnlog, "cas_commit", kill_before_cas, False),
+        "before_link": (os, "link", kill_in_link(landed=False), False),
+        "after_link": (os, "link", kill_in_link(landed=True), True),
+    }
+    for point, (mod, attr, fake, landed) in crash_points.items():
+        b_root = str(tmp_path / point)
+        txnlog_sink_batch(b_root, batches[0], 0)
+        with monkeypatch.context() as m:
+            m.setattr(mod, attr, fake)
+            with pytest.raises(RuntimeError, match="simulated kill"):
+                txnlog_sink_batch(b_root, batches[1], 1)
+        assert txnlog.list_versions(b_root) == ([1, 2] if landed else [1]), point
+        assert not [
+            f for f in os.listdir(os.path.join(b_root, "_txn"))
+            if f.startswith(".tmp-")
+        ], f"{point}: tmp payload left behind"
+        # restart: the failed batch is redelivered — twice, to prove the
+        # second delivery is a structural no-op, not luck
+        txnlog_sink_batch(b_root, batches[1], 1)
+        txnlog_sink_batch(b_root, batches[1], 1)
+        assert txnlog.list_versions(b_root) == [1, 2], point
+        txnlog_sink_batch(b_root, batches[2], 2)
+
+        assert txnlog.list_versions(b_root) == [1, 2, 3], point
+        for v, expect_bid in ((1, 0), (2, 1), (3, 2)):
+            assert txnlog.read_version(b_root, v)["batch_id"] == expect_bid
+        assert final(b_root) == want_final, point
+        assert feed(b_root) == want_feed, (
+            f"{point}: CDF over the restarted table diverged"
+        )
+
+
+def test_txnlog_sink_cas_serializes_racing_writers(tmp_path, spark, monkeypatch):
+    """Multi-writer safety of the streaming MERGE sink comes from the
+    CAS, not from a writer lease:
+
+    (a) two threads deliver the SAME batch id to one root and are held
+        at a barrier just before cas_commit — exactly one version lands
+        (the loser rebases, finds the winner's batch id, and stops) and
+        the state equals a single apply;
+    (b) a foreign commit forced between the sink's read and its CAS
+        makes the sink rebase onto it — no lost update on either side —
+        and a redelivery afterwards is still a no-op (the batch-id
+        high-water mark rides through the foreign commit)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from kinesis_datastore_app_spark import txnlog
+    from kinesis_datastore_app_spark.catalog import table
+    from kinesis_datastore_app_spark.streaming.queries import txnlog_sink_batch
+
+    from .conftest import SF_SMOKE
+
+    e = table(spark, SF_SMOKE, "events")
+    batches = [
+        e.filter(F.pmod(F.col("event_id"), F.lit(2)) == i) for i in range(2)
+    ]
+
+    def state(r):
+        snap = txnlog.snapshot_path(r, txnlog.read_latest(r)[1])
+        df = spark.read.parquet(snap).select(
+            "user_id", "last_status", "n_events"
+        )
+        return sorted(map(tuple, df.collect()))
+
+    single = str(tmp_path / "single")
+    for i, b in enumerate(batches):
+        txnlog_sink_batch(single, b, i)
+    want = state(single)
+    real_cas = txnlog.cas_commit
+
+    # (a) the same batch id from two threads, both held before the CAS
+    root = str(tmp_path / "race")
+    txnlog_sink_batch(root, batches[0], 0)
+    barrier = threading.Barrier(2, timeout=300)
+    held, attempts, errors = set(), [], []
+
+    def held_cas(r, version, payload):
+        attempts.append(version)
+        if threading.get_ident() not in held:
+            held.add(threading.get_ident())
+            barrier.wait()
+        return real_cas(r, version, payload)
+
+    def deliver():
+        try:
+            txnlog_sink_batch(root, batches[1], 1)
+        except Exception as exc:  # surfaced below, on the main thread
+            errors.append(exc)
+
+    monkeypatch.setattr(txnlog, "cas_commit", held_cas)
+    ts = [threading.Thread(target=deliver) for _ in range(2)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(timeout=600)
+    monkeypatch.setattr(txnlog, "cas_commit", real_cas)
+    assert not any(t.is_alive() for t in ts), "a delivery never finished"
+    assert not errors, errors
+    # both raced for v2; the loser's rebase stopped before a second CAS
+    assert attempts == [2, 2]
+    assert txnlog.list_versions(root) == [1, 2]
+    assert txnlog.read_latest(root)[1]["batch_id"] == 1
+    assert state(root) == want
+
+    # (b) a foreign commit lands between the sink's read and its CAS
+    root = str(tmp_path / "foreign")
+    txnlog_sink_batch(root, batches[0], 0)
+    seen = []
+
+    def foreign_merge(prev_dir):
+        # a maintenance writer that also adds one row of its own
+        name = f"foreign-{uuid.uuid4().hex[:8]}"
+        prev = spark.read.parquet(prev_dir)
+        ghost = prev.limit(1).withColumns({
+            "user_id": F.lit(-1).cast(prev.schema["user_id"].dataType),
+            "last_status": F.lit("foreign"),
+        })
+        prev.unionByName(ghost).write.parquet(os.path.join(root, name))
+        return name
+
+    def cas_after_foreign(r, version, payload):
+        seen.append((version, payload["snapshot"]))
+        if len(seen) == 1:
+            txnlog.commit_snapshot(root, foreign_merge)
+        return real_cas(r, version, payload)
+
+    monkeypatch.setattr(txnlog, "cas_commit", cas_after_foreign)
+    txnlog_sink_batch(root, batches[1], 1)
+    monkeypatch.setattr(txnlog, "cas_commit", real_cas)
+    # sink lost v2 to the foreign writer, rebased, and won v3
+    assert [v for v, _ in seen] == [2, 2, 3]
+    assert seen[0][1].startswith("snap-b1-")
+    assert seen[1][1].startswith("foreign-")
+    assert seen[2][1].startswith("snap-b1-")
+    assert txnlog.list_versions(root) == [1, 2, 3]
+    assert txnlog.read_version(root, 2)["batch_id"] == 0  # carried forward
+    assert txnlog.read_version(root, 3)["batch_id"] == 1
+    got = state(root)
+    assert [t for t in got if t[0] != -1] == want, "sink update lost"
+    assert [t[1] for t in got if t[0] == -1] == ["foreign"], (
+        "foreign update lost"
+    )
+    # the high-water mark still holds: a redelivery is a no-op
+    txnlog_sink_batch(root, batches[1], 1)
+    assert txnlog.list_versions(root) == [1, 2, 3]
+    assert state(root) == got
 
 
 def test_cdf_incremental_rollup_apply_twice_diverges(spark):
