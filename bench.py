@@ -67,7 +67,7 @@ HEADLINE = [
     "text_decontaminate",    # shingle inverted-index vs broadcast eval set
     "pipeline_training_manifest",  # fused gate→mixture→split→token budget
     "agg_count_min",         # CMS build (one (d,bkt) shuffle) + probes
-    "stream_cdc_merge",      # foreachBatch bucketed MERGE snapshot
+    "stream_cdc_merge",      # foreachBatch COW MERGE via the txnlog sink
     "agg_quantile_sketch",   # KLL-style approx percentiles + bounds
     "embed_random_projection",  # JL 64→16 projection (scan-speed codegen)
     "sample_mixture",        # broadcast mixture table + keyed LCG sampling

@@ -484,7 +484,6 @@ def sliced_cow_commits(
     keys: list[str],
     purge=None,
     n_slices: int = 3,
-    writer=None,
     clock=None,
 ) -> None:
     """The shared COW-commit fixture loop (round-10 review: previously
@@ -496,21 +495,14 @@ def sliced_cow_commits(
     (numerics.cents) so the partial-merge reassociation is exact.
     Snapshot names carry a uuid suffix per commit_snapshot's unique-name
     contract (an OCC retry must never overwrite a dir a reader may
-    already hold).
-
-    ``writer(df, dest)`` overrides the snapshot write (round 12: the
-    bucket-keyed layout the CDF stream source prunes to); the default
-    is a plain parquet write. ``clock`` threads through to
-    commit_snapshot so fixtures commit at deterministic instants
-    (timestamp time travel)."""
+    already hold). ``clock`` threads through to commit_snapshot so
+    fixtures commit at deterministic instants (timestamp time
+    travel)."""
     import os
     import uuid
 
     from kinesis_datastore_app_spark.numerics import cents
     from kinesis_datastore_app_spark.txnlog import commit_snapshot
-
-    if writer is None:
-        writer = lambda df, dest: df.write.mode("overwrite").parquet(dest)
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", *keys, cents("o_totalprice").alias("c")
@@ -536,14 +528,9 @@ def sliced_cow_commits(
             def merge(prev_dir: str | None, batch=batch, i=i) -> str:
                 cur = batch
                 if prev_dir is not None:
-                    # explicit column list: a hive-bucketed prev layout
-                    # surfaces its partition column on a plain read, which
-                    # must not leak into the merge
-                    prev = spark.read.parquet(prev_dir).select(
-                        *keys, "n_orders", "cents"
-                    )
                     cur = (
-                        prev.unionByName(cur)
+                        spark.read.parquet(prev_dir)
+                        .unionByName(cur)
                         .groupBy(*keys)
                         .agg(
                             F.sum("n_orders").alias("n_orders"),
@@ -553,7 +540,7 @@ def sliced_cow_commits(
                 if i == n_slices - 1 and purge is not None:
                     cur = cur.filter(purge)
                 name = f"snap-{i + 1}-{uuid.uuid4().hex[:8]}"
-                writer(cur, os.path.join(root, name))
+                cur.write.mode("overwrite").parquet(os.path.join(root, name))
                 return name
 
             commit_snapshot(root, merge, clock=clock)
@@ -1771,9 +1758,11 @@ def append_rows(
     from kinesis_datastore_app_spark.txnlog import (
         BatchAlreadyApplied,
         PendingDeleteVectors,
+        entry_dirs,
         occ_commit,
         read_latest,
         sink_batch_hwm,
+        successor_manifest,
     )
 
     _, probe = read_latest(root)
@@ -1829,13 +1818,7 @@ def append_rows(
     # rebucket changes n and makes the apply below raise — rare, and
     # the orphaned stem is vacuum-sweepable debris, same as any loser)
     name = f"append-{uuid.uuid4().hex[:8]}"
-    dest = os.path.join(root, name)
-    write_bucketed_snapshot(df, dest, keys, n)
-    wrote = {
-        d.split("=", 1)[1]
-        for d in os.listdir(dest)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
+    wrote = write_bucketed_snapshot(df, os.path.join(root, name), keys, n)
     fresh = _bucket_stem_stats(
         root, name, spec0.get("stats_cols"), spec0.get("bloom_cols")
     )
@@ -1863,32 +1846,34 @@ def append_rows(
                 "delete appended rows sharing a purged key)"
             )
         dirs = dict(spec.get("dirs") or {})
-        for b in sorted(wrote, key=int):
-            entry = dirs.get(b)
+        for b in map(str, wrote):
             new_dir = f"{name}/{BUCKET_COL}={b}"
-            if entry is None:
-                dirs[b] = new_dir
-            else:
-                dirs[b] = (
-                    entry if isinstance(entry, list) else [entry]
-                ) + [new_dir]
-        new_spec: dict = {"cols": keys, "n": n, "dirs": dirs}
-        for opt in ("stats_cols", "bloom_cols", "schema"):
-            if spec.get(opt):
-                new_spec[opt] = list(spec[opt])
-        payload = {"buckets": new_spec, "writer": uuid.uuid4().hex[:8]}
-        for m in ("stats", "nulls", "bloom"):
-            merged = dict(prev.get(m) or {})
-            merged.update(fresh.get(m, {}))
-            if merged:
-                payload[m] = merged
+            dirs[b] = entry_dirs(dirs[b]) + [new_dir] if b in dirs else new_dir
+        payload = successor_manifest(prev, dirs, fresh)
         if batch_id is not None:
             payload["batch_id"] = batch_id
-        elif "batch_id" in prev:
-            payload["batch_id"] = prev["batch_id"]
         return payload
 
     return occ_commit(root, apply)
+
+
+def check_blind_appends(root: str, versions: list[int]) -> None:
+    """Raise unless each of ``versions`` after the first is a pure
+    blind append onto its predecessor — every prior bucket entry
+    survives VERBATIM as a prefix, so no prior file was rewritten — and
+    at least one bucket of the last grew into a multi-stem list."""
+    from kinesis_datastore_app_spark.txnlog import entry_dirs, read_version
+
+    dirs = [read_version(root, v)["buckets"]["dirs"] for v in versions]
+    for v, prev_d, cur_d in zip(versions[1:], dirs, dirs[1:]):
+        for b, e in prev_d.items():
+            old = entry_dirs(e)
+            if entry_dirs(cur_d.get(b, []))[: len(old)] != old:
+                raise RuntimeError(
+                    f"append at v{v} disturbed bucket {b}'s prior entries"
+                )
+    if not any(len(entry_dirs(e)) > 1 for e in dirs[-1].values()):
+        raise RuntimeError("no bucket entry grew into a multi-stem list")
 
 
 class _NothingToCompact(Exception):
@@ -1922,15 +1907,9 @@ def compact_stems(
     non-manifest base and on pending deletion vectors
     (compact_delete_vectors does both jobs — applying vectors IS a
     rewrite of their buckets)."""
-    import os
-    import uuid
-
-    from kinesis_datastore_app_spark.sources.cdf_stream import (
-        BUCKET_COL,
-        bucket_id_udf,
-    )
     from kinesis_datastore_app_spark.txnlog import (
         PendingDeleteVectors,
+        entry_dirs,
         occ_commit,
         read_latest,
     )
@@ -1939,9 +1918,6 @@ def compact_stems(
         raise ValueError("min_stems must be >= 2 (1 would rewrite "
                          "every bucket — that is rebucket_table's job)")
     audit: dict = {}
-
-    def flat(entry) -> list[str]:
-        return entry if isinstance(entry, list) else [entry]
 
     def apply(prev: dict | None, prev_v: int) -> dict:
         spec = (prev or {}).get("buckets")
@@ -1956,63 +1932,26 @@ def compact_stems(
                 "compact_delete_vectors applies them and collapses the "
                 "touched buckets' stems in the same commit"
             )
-        keys, n = list(spec["cols"]), spec["n"]
-        dirs = dict(spec.get("dirs") or {})
+        dirs = spec.get("dirs") or {}
         victims = sorted(
-            (b for b, e in dirs.items() if len(flat(e)) >= min_stems),
-            key=int,
-        )
-        audit["compacted"] = [int(b) for b in victims]
-        audit["carried"] = sorted(
-            int(b) for b in dirs if b not in set(victims)
+            int(b) for b, e in dirs.items() if len(entry_dirs(e)) >= min_stems
         )
         if not victims:
+            audit.update(compacted=[], carried=sorted(map(int, dirs)))
             raise _NothingToCompact
-        frag = _manifest_read(
+        # the fragmented buckets' rows rewritten unchanged into one
+        # fresh stem: a partial commit whose touched set is the victims
+        payload, part = partial_bucket_payload(
             spark,
+            root,
             prev,
-            [os.path.join(root, d) for b in victims for d in flat(dirs[b])],
+            list(spec["cols"]),
+            None,
+            lambda frag: frag,
+            "stemcompact",
+            precomputed_touched=(victims, spec["n"]),
         )
-        kb = bucket_id_udf(keys, n)
-        name = f"stemcompact-{uuid.uuid4().hex[:8]}"
-        dest = os.path.join(root, name)
-        (
-            frag.withColumn(BUCKET_COL, kb(*[F.col(k) for k in keys]))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(dest)
-        )
-        wrote = {
-            d.split("=", 1)[1]
-            for d in os.listdir(dest)
-            if d.startswith(f"{BUCKET_COL}=")
-        }
-        new_dirs = dict(dirs)
-        for b in victims:
-            if b in wrote:
-                new_dirs[b] = f"{name}/{BUCKET_COL}={b}"
-            else:  # pragma: no cover - compaction never drops rows
-                new_dirs.pop(b, None)
-        new_spec: dict = {"cols": keys, "n": n, "dirs": new_dirs}
-        for opt in ("stats_cols", "bloom_cols", "schema"):
-            if spec.get(opt):
-                new_spec[opt] = list(spec[opt])
-        payload = {"buckets": new_spec, "writer": uuid.uuid4().hex[:8]}
-        live = {d for e in new_dirs.values() for d in flat(e)}
-        fresh = _bucket_stem_stats(
-            root, name, spec.get("stats_cols"), spec.get("bloom_cols")
-        )
-        for m in ("stats", "nulls", "bloom"):
-            carried_entries = {
-                k: v
-                for k, v in (prev.get(m) or {}).items()
-                if k.rsplit("/", 1)[0] in live
-            }
-            merged = {**carried_entries, **fresh.get(m, {})}
-            if merged:
-                payload[m] = merged
-        if "batch_id" in prev:
-            payload["batch_id"] = prev["batch_id"]
+        audit.update(compacted=part["touched"], carried=part["carried"])
         return payload
 
     try:
@@ -2112,6 +2051,13 @@ def _branch_root(root: str, name: str) -> str:
     return os.path.join(root, f"_branch-{name}")
 
 
+def _map_entry(entry, fn):
+    """``fn`` over each dir of a manifest entry, keeping its shape (one
+    dir stays a string, a stem list a list), so a bucket carried through
+    a branch compares verbatim with main's entry."""
+    return [fn(d) for d in entry] if isinstance(entry, list) else fn(entry)
+
+
 def create_branch(root: str, name: str) -> str:
     """Open a WRITE-AUDIT-PUBLISH branch on a bucket-manifest table
     (round 13 — the Iceberg WAP / audit-branch workflow, the MUTABLE
@@ -2140,6 +2086,7 @@ def create_branch(root: str, name: str) -> str:
         PendingDeleteVectors,
         occ_commit,
         read_latest,
+        successor_manifest,
     )
 
     base_v, p = read_latest(root)
@@ -2159,23 +2106,14 @@ def create_branch(root: str, name: str) -> str:
     if os.path.exists(broot):
         raise ValueError(f"branch {name!r} already exists at {root}")
     dirs = {
-        b: (
-            [os.path.join(root, d) for d in e]
-            if isinstance(e, list)
-            else os.path.join(root, e)
-        )
+        b: _map_entry(e, lambda d: os.path.join(root, d))
         for b, e in (spec.get("dirs") or {}).items()
     }
-    new_spec: dict = {"cols": list(spec["cols"]), "n": spec["n"], "dirs": dirs}
-    for opt in ("stats_cols", "bloom_cols", "schema"):
-        if spec.get(opt):
-            new_spec[opt] = list(spec[opt])
-    payload = {
-        "buckets": new_spec,
-        "writer": "wap-bootstrap",
-        "wap_base": base_v,
-        "wap_branch": name,
-    }
+    # main's skipping entries are keyed main-relative, so none matches
+    # an absolute dir and the builder drops them; the branch starts
+    # without a batch-id mark (publish carries main's)
+    payload = successor_manifest(p, dirs, batch_from={})
+    payload.update(writer="wap-bootstrap", wap_base=base_v, wap_branch=name)
 
     def apply(prev: dict | None, prev_v: int) -> dict:
         if prev is not None:  # pragma: no cover - fresh dir, v1 only
@@ -2216,13 +2154,13 @@ def publish_branch(
     validate → atomically expose) with no copy anywhere."""
     import os
     import shutil
-    import uuid
 
     from kinesis_datastore_app_spark.txnlog import (
         PendingDeleteVectors,
         occ_commit,
         read_latest,
         read_version,
+        successor_manifest,
     )
 
     broot = _branch_root(root, name)
@@ -2233,7 +2171,6 @@ def publish_branch(
             f"{broot} does not look like a WAP branch (no recorded base)"
         )
     bv, bp = read_latest(broot)
-    spec = bp["buckets"]
     if bp.get("deletes"):
         raise PendingDeleteVectors(
             f"branch {name!r} carries pending deletion vectors; "
@@ -2262,21 +2199,9 @@ def publish_branch(
 
     try:
         new_dirs = {
-            b: (
-                [relocate(x) for x in e]
-                if isinstance(e, list)
-                else relocate(e)
-            )
-            for b, e in (spec.get("dirs") or {}).items()
+            b: _map_entry(e, relocate)
+            for b, e in (bp["buckets"].get("dirs") or {}).items()
         }
-        new_spec: dict = {
-            "cols": list(spec["cols"]),
-            "n": spec["n"],
-            "dirs": new_dirs,
-        }
-        for opt in ("stats_cols", "bloom_cols", "schema"):
-            if spec.get(opt):
-                new_spec[opt] = list(spec[opt])
 
         def apply(prev: dict | None, prev_v: int) -> dict:
             if prev_v != base:
@@ -2285,16 +2210,8 @@ def publish_branch(
                     f"branch {name!r}; re-branch from the new head and "
                     "replay"
                 )
-            payload = {
-                "buckets": new_spec,
-                "writer": uuid.uuid4().hex[:8],
-            }
-            for m in ("stats", "nulls", "bloom"):
-                if bp.get(m):
-                    payload[m] = dict(bp[m])
-            if prev is not None and "batch_id" in prev:
-                payload["batch_id"] = prev["batch_id"]
-            return payload
+            # the branch head's spec and skipping maps, main's mark
+            return successor_manifest(bp, new_dirs, batch_from=prev or {})
 
         v, pub = occ_commit(root, apply)
     except BaseException:
@@ -2340,6 +2257,7 @@ def rebucket_table(
         PendingDeleteVectors,
         data_paths,
         occ_commit,
+        successor_manifest,
     )
 
     def apply(prev: dict | None, prev_v: int) -> dict:
@@ -2361,25 +2279,19 @@ def rebucket_table(
         bcols = bloom_cols if bloom_cols is not None else spec.get("bloom_cols")
         state = _manifest_read(spark, prev, data_paths(root, prev))
         name = f"rebucket-{uuid.uuid4().hex[:8]}"
-        dest = os.path.join(root, name)
-        write_bucketed_snapshot(state, dest, keys, n_buckets)
-        dirs = {
-            d.split("=", 1)[1]: f"{name}/{d}"
-            for d in sorted(os.listdir(dest))
-            if d.startswith(f"{BUCKET_COL}=")
-        }
-        new_spec: dict = {"cols": keys, "n": n_buckets, "dirs": dirs}
-        if spec.get("schema"):
-            new_spec["schema"] = list(spec["schema"])
-        if scols:
-            new_spec["stats_cols"] = list(scols)
-        if bcols:
-            new_spec["bloom_cols"] = list(bcols)
-        payload = {"buckets": new_spec, "writer": uuid.uuid4().hex[:8]}
-        payload.update(_bucket_stem_stats(root, name, scols, bcols))
-        if "batch_id" in prev:
-            payload["batch_id"] = prev["batch_id"]
-        return payload
+        wrote = write_bucketed_snapshot(
+            state, os.path.join(root, name), keys, n_buckets
+        )
+        # every old dir drops out of the manifest, and with it every
+        # carried skipping entry: the maps are the new stem's alone
+        return successor_manifest(
+            prev,
+            {str(b): f"{name}/{BUCKET_COL}={b}" for b in wrote},
+            _bucket_stem_stats(root, name, scols, bcols),
+            n=n_buckets,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+        )
 
     return occ_commit(root, apply)
 
@@ -2432,25 +2344,8 @@ def txn_append_blind(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch) regardless of table size, reads stay bucket-prunable,
     and a later MERGE/compaction/rebucket collapses stem lists — the
     append/compact cadence of every log-structured store."""
-    from kinesis_datastore_app_spark.txnlog import read_version
-
     root = _append_fixture(spark, sf_dir)
-
-    def entries(v):
-        return read_version(root, v)["buckets"]["dirs"]
-
-    def flat(e):
-        return e if isinstance(e, list) else [e]
-
-    for v in (2, 3):
-        prev_d, cur_d = entries(v - 1), entries(v)
-        for b, e in prev_d.items():
-            if flat(cur_d.get(b, []))[: len(flat(e))] != flat(e):
-                raise RuntimeError(
-                    f"append at v{v} disturbed bucket {b}'s prior entries"
-                )
-    if not any(isinstance(e, list) and len(e) > 1 for e in entries(3).values()):
-        raise RuntimeError("no bucket entry grew into a multi-stem list")
+    check_blind_appends(root, [1, 2, 3])
     return read_table_state(spark, root, 3).select(
         "o_orderkey", "o_custkey", "cents"
     )
@@ -2716,16 +2611,13 @@ def maintenance_compact_stems(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmented one. At 100 TB this is the continuous hygiene pass:
     cost O(fragmented buckets' data), never O(table) — rebucket_table
     is the once-per-growth-step full re-layout; this runs between."""
-    from kinesis_datastore_app_spark.txnlog import read_version
+    from kinesis_datastore_app_spark.txnlog import entry_dirs, read_version
 
     root = _compact_stems_fixture(spark, sf_dir)
 
-    def flat(e):
-        return e if isinstance(e, list) else [e]
-
     d3 = read_version(root, 3)["buckets"]["dirs"]
     d4 = read_version(root, 4)["buckets"]["dirs"]
-    fragmented = {b for b, e in d3.items() if len(flat(e)) >= 2}
+    fragmented = {b for b, e in d3.items() if len(entry_dirs(e)) >= 2}
     if not fragmented:
         raise RuntimeError("fixture produced no fragmented buckets")
     for b, e in d3.items():
@@ -3116,11 +3008,9 @@ def commit_bucketed_table(
             )
         dirs: dict[str, str] = {}
     else:
-        write_bucketed_snapshot(df, dest, keys, n_buckets)
         dirs = {
-            d.split("=", 1)[1]: f"{name}/{d}"
-            for d in sorted(os.listdir(dest))
-            if d.startswith(f"{BUCKET_COL}=")
+            str(b): f"{name}/{BUCKET_COL}={b}"
+            for b in write_bucketed_snapshot(df, dest, keys, n_buckets)
         }
     spec: dict = {"cols": list(keys), "n": n_buckets, "dirs": dirs}
     # record the table schema IN the manifest (round 13 — the Delta
@@ -3230,6 +3120,11 @@ def partial_bucket_payload(
     from kinesis_datastore_app_spark.sources.cdf_stream import (
         BUCKET_COL,
         bucket_id_udf,
+        write_bucketed_snapshot,
+    )
+    from kinesis_datastore_app_spark.txnlog import (
+        entry_dirs,
+        successor_manifest,
     )
 
     spec = prev["buckets"]
@@ -3240,23 +3135,20 @@ def partial_bucket_payload(
         )
     n = spec["n"]
     dirs = dict(spec.get("dirs") or {})
-    kb = bucket_id_udf(keys, n)
-    kcols = [F.col(k) for k in keys]
     if precomputed_touched is not None and precomputed_touched[1] == n:
         touched = sorted(int(b) for b in precomputed_touched[0])
     else:
+        kb = bucket_id_udf(keys, n)
         touched = sorted(
             int(r[BUCKET_COL])
-            for r in delta.select(kb(*kcols).alias(BUCKET_COL))
+            for r in delta.select(
+                kb(*[F.col(k) for k in keys]).alias(BUCKET_COL)
+            )
             .distinct()
             .collect()
         )
-    def flat(entry) -> list[str]:
-        # one dir, or a LIST of dirs after blind appends (append_rows)
-        return entry if isinstance(entry, list) else [entry]
-
     existing = [
-        d for b in touched if str(b) in dirs for d in flat(dirs[str(b)])
+        d for b in touched if str(b) in dirs for d in entry_dirs(dirs[str(b)])
     ]
     if existing:
         slice_df = _manifest_read(
@@ -3270,55 +3162,25 @@ def partial_bucket_payload(
                 "bootstrap with commit_bucketed_table first"
             )
         slice_df = _manifest_read(
-            spark, prev, [os.path.join(root, flat(any_entry)[0])]
+            spark, prev, [os.path.join(root, entry_dirs(any_entry)[0])]
         ).limit(0)
-    result = transform(slice_df)
     name = f"{stem}-{uuid.uuid4().hex[:8]}"
-    dest = os.path.join(root, name)
-    (
-        result.withColumn(BUCKET_COL, kb(*kcols))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(dest)
+    wrote = write_bucketed_snapshot(
+        transform(slice_df), os.path.join(root, name), keys, n
     )
-    wrote = {
-        d.split("=", 1)[1]
-        for d in os.listdir(dest)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
     new_dirs = dict(dirs)
     for b in touched:
-        if str(b) in wrote:
+        if b in wrote:
             new_dirs[str(b)] = f"{name}/{BUCKET_COL}={b}"
         else:
             new_dirs.pop(str(b), None)  # every row of the bucket deleted
-    new_spec = {"cols": list(keys), "n": n, "dirs": new_dirs}
-    for opt in ("stats_cols", "bloom_cols", "schema"):
-        if spec.get(opt):
-            new_spec[opt] = list(spec[opt])
-    payload = {
-        "buckets": new_spec,
-        "writer": uuid.uuid4().hex[:8],
-    }
-    # data skipping × partial commits (round 13): carry forward the
-    # carried buckets' per-file stats entries (ROOT-relative keys →
-    # entry's dir prefix still referenced), collect fresh entries for
-    # this commit's stem only — never re-reading untouched files
-    live = {d for e in new_dirs.values() for d in flat(e)}
+    # data skipping × partial commits (round 13): carried buckets keep
+    # their entries, fresh ones are collected for this commit's stem
+    # only — never re-reading untouched files
     fresh = _bucket_stem_stats(
         root, name, spec.get("stats_cols"), spec.get("bloom_cols")
     )
-    for m in ("stats", "nulls", "bloom"):
-        carried_entries = {
-            k: v
-            for k, v in (prev.get(m) or {}).items()
-            if k.rsplit("/", 1)[0] in live
-        }
-        merged = {**carried_entries, **fresh.get(m, {})}
-        if merged:
-            payload[m] = merged
-    if "batch_id" in prev:
-        payload["batch_id"] = prev["batch_id"]
+    payload = successor_manifest(prev, new_dirs, fresh)
     carried = sorted(int(b) for b in dirs if int(b) not in set(touched))
     return payload, {"touched": touched, "carried": carried}
 
@@ -3383,6 +3245,7 @@ def merge_into(
     from kinesis_datastore_app_spark.txnlog import (
         PendingDeleteVectors,
         occ_commit,
+        successor_manifest,
     )
 
     if check_duplicate_source:
@@ -3436,41 +3299,17 @@ def merge_into(
                 }
                 if not (changed & staged["touched"]):
                     # disjoint winner(s): overlay the staged buckets on
-                    # the winner's manifest — no recompute, no re-read
+                    # the winner's manifest — no recompute, no re-read;
+                    # the winner's spec, skipping entries for still-
+                    # referenced dirs and mark carry like any successor's
                     new_dirs = dict(cur)
                     new_dirs.update(staged["dirs"])
                     for b in staged["emptied"]:
                         new_dirs.pop(b, None)
-                    new_spec = {
-                        "cols": list(keys),
-                        "n": spec["n"],
-                        "dirs": new_dirs,
-                    }
-                    new_spec.update(staged["spec_opts"])
-                    payload = {
-                        "buckets": new_spec,
-                        "writer": uuid.uuid4().hex[:8],
-                        "rebase": "disjoint-overlay",
-                    }
-                    # skipping maps survive the overlay exactly as they
-                    # survive a partial commit: the winner's entries for
-                    # still-referenced dirs + our staged stem's fresh ones
-                    live = {
-                        d
-                        for e in new_dirs.values()
-                        for d in (e if isinstance(e, list) else [e])
-                    }
-                    for m in ("stats", "nulls", "bloom"):
-                        merged = {
-                            k: v
-                            for k, v in (prev.get(m) or {}).items()
-                            if k.rsplit("/", 1)[0] in live
-                        }
-                        merged.update(staged["fresh"].get(m, {}))
-                        if merged:
-                            payload[m] = merged
-                    if "batch_id" in prev:
-                        payload["batch_id"] = prev["batch_id"]
+                    payload = successor_manifest(
+                        prev, new_dirs, staged["fresh"]
+                    )
+                    payload["rebase"] = "disjoint-overlay"
                     return payload
             payload, audit = partial_bucket_payload(
                 spark, root, prev, keys, source, clauses, "merge"
@@ -3489,11 +3328,6 @@ def merge_into(
                 touched=touched,
                 dirs=staged_dirs,
                 emptied={b for b in touched if b not in out_dirs},
-                spec_opts={
-                    opt: list(spec[opt])
-                    for opt in ("stats_cols", "bloom_cols")
-                    if spec.get(opt)
-                },
                 fresh={
                     m: {
                         k: v

@@ -949,6 +949,7 @@ def stream_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness, not just counts). Restart redelivery is separately
     pinned in tests/test_txnlog.py via a direct re-delivery of an
     already-applied batch id."""
+    from kinesis_datastore_app_spark.operators.cdc import check_blind_appends
     from kinesis_datastore_app_spark.txnlog import (
         data_paths,
         list_versions,
@@ -961,23 +962,7 @@ def stream_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"expected 4 versions (bootstrap + 3 batches), got {versions}"
         )
-
-    def entries(v: int) -> dict:
-        return read_version(root, v)["buckets"]["dirs"]
-
-    def flat(e):
-        return e if isinstance(e, list) else [e]
-
-    for v in versions[1:]:
-        prev_d, cur_d = entries(v - 1), entries(v)
-        for b, e in prev_d.items():
-            if flat(cur_d.get(b, []))[: len(flat(e))] != flat(e):
-                raise RuntimeError(
-                    f"batch append at v{v} disturbed bucket {b}'s entries"
-                )
-    last = entries(versions[-1])
-    if not any(isinstance(e, list) and len(e) > 1 for e in last.values()):
-        raise RuntimeError("no bucket entry grew into a multi-stem list")
+    check_blind_appends(root, versions)
     state = spark.read.parquet(
         *data_paths(root, read_version(root, versions[-1]))
     )
@@ -1104,8 +1089,7 @@ def txnlog_apply_feed_batch(
     form (cdc.commit_bucketed_table — run_cdf_to_table does this)
     rewrites per batch ONLY the buckets the batch's change-row keys
     hash into; every untouched bucket carries forward by reference in
-    the new version's manifest. A flat-snapshot bootstrap keeps the
-    documented full-COW fallback.
+    the new version's manifest.
 
     At 100 TB: per batch, O(feed) change rows + a keyed shuffle and
     rewrite of the TOUCHED buckets only, one CAS — the continuous
@@ -1140,9 +1124,6 @@ def _apply_feed_batch_persisted(
     vals: list[str],
     sess: SparkSession,
 ) -> None:
-    import os
-    import uuid
-
     from kinesis_datastore_app_spark.operators.cdc import (
         apply_feed,
         partial_bucket_payload,
@@ -1150,11 +1131,7 @@ def _apply_feed_batch_persisted(
     from kinesis_datastore_app_spark.sources.cdf_stream import (
         bucket_id_udf,
     )
-    from kinesis_datastore_app_spark.txnlog import (
-        occ_commit,
-        read_latest,
-        snapshot_path,
-    )
+    from kinesis_datastore_app_spark.txnlog import occ_commit, read_latest
 
     # ONE action on the persisted feed for BOTH driver-side facts this
     # batch needs (guide §1.2 — r14: the r13 ledger's remaining
@@ -1205,29 +1182,25 @@ def _apply_feed_batch_persisted(
                 "vectors; compact them before applying feed batches"
             )
         spec = (prev or {}).get("buckets")
-        if isinstance(spec, dict) and list(spec.get("cols") or []) == list(
-            keys
+        if not (
+            isinstance(spec, dict)
+            and list(spec.get("cols") or []) == list(keys)
         ):
-            payload, _ = partial_bucket_payload(
-                sess,
-                root,
-                prev,
-                keys,
-                batch_df.select(*keys),
-                apply_steps,
-                f"derived-b{batch_id}",
-                precomputed_touched=pre_touched,
-            )
-        elif prev is None or prev.get("snapshot") is None:
             raise ValueError(
                 f"derived table at {root} is not bootstrapped — commit "
-                "the consumer's start state (batch_id=-1) before streaming"
+                "the consumer's start state (batch_id=-1) as a bucket "
+                "manifest on the feed keys before streaming"
             )
-        else:
-            state = apply_steps(sess.read.parquet(snapshot_path(root, prev)))
-            name = f"derived-b{batch_id}-{uuid.uuid4().hex[:8]}"
-            state.write.mode("overwrite").parquet(os.path.join(root, name))
-            payload = {"snapshot": name}
+        payload, _ = partial_bucket_payload(
+            sess,
+            root,
+            prev,
+            keys,
+            batch_df.select(*keys),
+            apply_steps,
+            f"derived-b{batch_id}",
+            precomputed_touched=pre_touched,
+        )
         payload["batch_id"] = batch_id
         payload["src_version"] = max(
             versions[-1], (prev or {}).get("src_version", 0)

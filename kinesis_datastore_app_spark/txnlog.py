@@ -429,9 +429,7 @@ def _payload_snapshots(p: dict | None) -> set[str]:
     b = p.get("buckets")
     if isinstance(b, dict) and isinstance(b.get("dirs"), dict):
         for entry in b["dirs"].values():
-            # round 13: a bucket's entry is one dir or — after blind
-            # appends — a LIST of dirs (base + appended stems)
-            for d in entry if isinstance(entry, list) else [entry]:
+            for d in entry_dirs(entry):
                 if d:
                     out.add(d.split("/", 1)[0])
         return out
@@ -724,12 +722,73 @@ def data_paths(root: str, payload: dict | None) -> list[str] | None:
         dirs = b["dirs"]
         out = []
         for k in sorted(dirs, key=lambda s: (len(s), s)):
-            entry = dirs[k]
-            for d in entry if isinstance(entry, list) else [entry]:
+            for d in entry_dirs(dirs[k]):
                 if d:
                     out.append(os.path.join(root, d))
         return out
     return None
+
+
+def entry_dirs(entry) -> list[str]:
+    """A bucket-manifest ``dirs`` entry as its list of dirs: one dir,
+    or — after blind appends — a LIST of dirs (base + appended stems),
+    all part of the bucket's state."""
+    return entry if isinstance(entry, list) else [entry]
+
+
+def successor_manifest(
+    prev: dict,
+    dirs: dict,
+    fresh: dict | None = None,
+    batch_from: dict | None = None,
+    n: int | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+) -> dict:
+    """The payload of a bucket-manifest commit that follows ``prev``,
+    with ``dirs`` as its bucket → dir(s) map. Every manifest writer
+    builds its successor here, so what a commit carries forward is
+    decided once:
+
+    * the spec: prev's ``cols``, ``n``, ``stats_cols``, ``bloom_cols``
+      and ``schema``; ``n``/``stats_cols``/``bloom_cols`` override when
+      given (rebucket_table), and an empty list drops the option;
+    * the ``stats``/``nulls``/``bloom`` skipping maps: prev's entries
+      for files under a dir ``dirs`` still references (keys are
+      ROOT-relative ``<stem>/kbucket=N/<file>``), plus ``fresh``'s —
+      the new stem's entries;
+    * the batch-id high-water mark of ``batch_from`` (default prev),
+      so maintenance commits never reset a streaming sink's mark.
+
+    Deletion vectors and writer-specific fields are NOT carried: a
+    writer that keeps them adds them back itself."""
+    old = prev["buckets"]
+    spec: dict = {
+        "cols": list(old["cols"]),
+        "n": old["n"] if n is None else n,
+        "dirs": dirs,
+    }
+    carried = {
+        "stats_cols": old.get("stats_cols") if stats_cols is None else stats_cols,
+        "bloom_cols": old.get("bloom_cols") if bloom_cols is None else bloom_cols,
+        "schema": old.get("schema"),
+    }
+    spec.update({opt: list(v) for opt, v in carried.items() if v})
+    payload: dict = {"buckets": spec, "writer": uuid.uuid4().hex[:8]}
+    live = {d for e in dirs.values() for d in entry_dirs(e)}
+    for m in ("stats", "nulls", "bloom"):
+        merged = {
+            k: v
+            for k, v in (prev.get(m) or {}).items()
+            if k.rsplit("/", 1)[0] in live
+        }
+        merged.update((fresh or {}).get(m) or {})
+        if merged:
+            payload[m] = merged
+    src = prev if batch_from is None else batch_from
+    if "batch_id" in src:
+        payload["batch_id"] = src["batch_id"]
+    return payload
 
 
 def manifest_schema_ddl(payload: dict | None) -> str | None:
@@ -1271,6 +1330,24 @@ def bloom_might_contain(digest: dict, value) -> bool:
     )
 
 
+def _version_files(root: str, payload: dict | None) -> list[tuple[str, str]]:
+    """(stats key, path) for every data file of a single-table version
+    — the enumeration both pruned-file readers share, so what a
+    skipping-map key is relative to lives here: the snapshot dir for
+    the ``snapshot`` form, the table ROOT for a bucket manifest (partial
+    commits carry entries from several stems forward with their
+    buckets — round 13). Empty for an empty-table version."""
+    snap = snapshot_path(root, payload)
+    if snap is not None:
+        return [(f, os.path.join(snap, f)) for f in _walk_parquet_rel(snap)]
+    rels = [
+        os.path.relpath(os.path.join(d, f), root)
+        for d in data_paths(root, payload) or []
+        for f in _walk_parquet_rel(d)
+    ]
+    return [(r, os.path.join(root, r)) for r in rels]
+
+
 def pruned_point_files(
     root: str, version: int, col: str, value, payload: dict | None = None
 ) -> tuple[list[str], int]:
@@ -1315,21 +1392,8 @@ def pruned_point_files(
         bl = (blooms.get(rel) or {}).get(col)
         return bl is not None and not bloom_might_contain(bl, value)
 
-    snap = snapshot_path(root, payload)
-    if snap is None:
-        paths = data_paths(root, payload)
-        if paths is None:
-            return [], 0
-        rels = [
-            os.path.relpath(os.path.join(d, f), root)
-            for d in paths
-            for f in _walk_parquet_rel(d)
-        ]
-        chosen = [os.path.join(root, r) for r in rels if not skip(r)]
-        return chosen, len(rels)
-    all_files = _walk_parquet_rel(snap)
-    chosen = [os.path.join(snap, f) for f in all_files if not skip(f)]
-    return chosen, len(all_files)
+    files = _version_files(root, payload)
+    return [p for k, p in files if not skip(k)], len(files)
 
 
 def pruned_version_files(
@@ -1359,22 +1423,5 @@ def pruned_version_files(
         s = (stats.get(rel) or {}).get(col)
         return s is None or not (hi < s[0] or lo > s[1])
 
-    snap = snapshot_path(root, payload)
-    if snap is None:
-        # bucket-manifest payload (or multi-table: no top-level
-        # snapshot): stats keys are ROOT-relative (partial commits
-        # carry entries from several stems — round 13); files without
-        # entries are included, conservative as ever
-        paths = data_paths(root, payload)
-        if paths is None:
-            return [], 0
-        rels = [
-            os.path.relpath(os.path.join(d, f), root)
-            for d in paths
-            for f in _walk_parquet_rel(d)
-        ]
-        chosen = [os.path.join(root, r) for r in rels if keep(r)]
-        return chosen, len(rels)
-    all_files = _walk_parquet_rel(snap)
-    chosen = [os.path.join(snap, f) for f in all_files if keep(f)]
-    return chosen, len(all_files)
+    files = _version_files(root, payload)
+    return [p for k, p in files if keep(k)], len(files)

@@ -1967,111 +1967,6 @@ def test_sink_hwm_survives_compaction_and_vacuum_and_indeterminate_raises(
     assert txnlog.list_versions(bad) == [2], "refused commit left a version"
 
 
-def test_bucketed_snapshot_plan_prunes_per_task_files(tmp_path, spark):
-    """Round-12 (r11 verdict item 1 "done" criterion): under the
-    bucket-keyed snapshot layout each (step, bucket) task's read plan
-    opens ONLY its bucket slice — the per-task files-opened drop is
-    ~n_buckets× vs the unbucketed fallback — and the diff rows are
-    IDENTICAL between the two layouts (pruning is a plan change, never
-    a semantics change)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_datastore_app_spark.sources.cdf_stream import (
-        _diff_rows,
-        _snapshot_read_plan,
-        write_bucketed_snapshot,
-    )
-
-    n_buckets = 4
-    keys, vals = ["k"], ["x"]
-
-    def states(i):
-        rows = [(k, k * 10 + i) for k in range(200)]
-        if i == 1:
-            rows = [r for r in rows if r[0] % 7 != 3]  # deletes at v2
-        return spark.createDataFrame(rows, "k bigint, x bigint")
-
-    roots = {}
-    for layout in ("bucketed", "flat"):
-        root = str(tmp_path / layout)
-        os.makedirs(root)
-        for i in range(2):
-            df = states(i)
-
-            def merge(prev_dir, df=df, i=i, root=root, layout=layout):
-                name = f"snap-{i + 1}"
-                dest = os.path.join(root, name)
-                if layout == "bucketed":
-                    write_bucketed_snapshot(df, dest, keys, n_buckets)
-                else:
-                    df.write.mode("overwrite").parquet(dest)
-                return name
-
-            commit_snapshot(root, merge)
-        roots[layout] = root
-
-    # files-opened pin: bucketed plan opens a disjoint 1/n_buckets
-    # slice per task; flat plan opens every file in every task
-    for v in (1, 2):
-        flat_paths, flat_pruned = _snapshot_read_plan(
-            roots["flat"], v, keys, 0, n_buckets
-        )
-        assert not flat_pruned and flat_paths, "flat layout claimed pruning"
-        per_bucket = []
-        seen = set()
-        for b in range(n_buckets):
-            paths, pruned = _snapshot_read_plan(
-                roots["bucketed"], v, keys, b, n_buckets
-            )
-            assert pruned, "bucketed layout not recognized"
-            assert not (set(paths) & seen), "bucket slices overlap"
-            seen |= set(paths)
-            per_bucket.append(len(paths))
-        total = sum(per_bucket)
-        assert total > 0
-        assert max(per_bucket) < total, (
-            f"no per-task file drop: {per_bucket}"
-        )
-        # every task of the flat fallback reads ALL files
-        assert len(flat_paths) * n_buckets >= total
-        # bytes, not just file counts: each bucketed task reads a
-        # strict fraction of the snapshot; the flat fallback pays the
-        # full snapshot in EVERY task (n_buckets× read amplification)
-        flat_bytes = sum(os.path.getsize(p) for p in flat_paths)
-        task_bytes = [
-            sum(
-                os.path.getsize(p)
-                for p in _snapshot_read_plan(
-                    roots["bucketed"], v, keys, b, n_buckets
-                )[0]
-            )
-            for b in range(n_buckets)
-        ]
-        assert max(task_bytes) < flat_bytes, (
-            f"per-task bytes did not drop: {task_bytes} vs flat {flat_bytes}"
-        )
-
-    # semantics pin: identical diff rows from both layouts
-    def all_rows(root):
-        out = []
-        for b in range(n_buckets):
-            out += list(_diff_rows(root, 1, 2, keys, vals, b, n_buckets))
-        return sorted(out)
-
-    assert all_rows(roots["bucketed"]) == all_rows(roots["flat"])
-    n_changes = len(all_rows(roots["flat"]))
-    assert n_changes > 0, "vacuous fixture"
-
-    # mismatched reader bucketing (n does not divide the layout's N)
-    # falls back to full-read+filter — still correct
-    odd = []
-    for b in range(3):
-        paths, pruned = _snapshot_read_plan(roots["bucketed"], 1, keys, b, 3)
-        assert not pruned
-        odd += list(_diff_rows(roots["bucketed"], 1, 2, keys, vals, b, 3))
-    assert sorted(odd) == all_rows(roots["flat"])
-
-
 def test_cdf_stream_nan_null_transition_is_update(tmp_path):
     """Round-11 ADVICE (low): NaN is a float VALUE, NULL is absence —
     the batch digest renders them differently (chr(1) vs '3:NaN'), so a
@@ -2738,6 +2633,9 @@ def test_merge_partial_disjoint_writers_fast_rebase(
     v, payload, state, b_prepares = run_race(ka)
     assert v == 3  # boot + interloper + B
     assert payload.get("rebase") == "disjoint-overlay"
+    # the overlay keeps v1's recorded schema (append_rows' write gate,
+    # evolve_table_schema and schema-applied reads all depend on it)
+    assert payload["buckets"]["schema"] == [["k", "bigint"], ["v", "bigint"]]
     assert b_prepares == 1, "disjoint loser recomputed instead of overlaying"
     assert state[ka] == ka * 10 + 1 and state[kb] == kb * 10 + 2
 
@@ -3104,12 +3002,12 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
     tmp_path, spark
 ):
     """Round 13: a MERGE-maintained table (bucket-manifest versions)
-    streams through the CDF source with the SAME per-task pruning as a
-    write_bucketed_snapshot layout — the manifest IS the spec. Pins:
-    (a) matched reader bucketing → pruned task plans with disjoint
-    slices; (b) the per-step diff rows equal the batch feed;
-    (c) a mismatched reader bucket count falls back (full read +
-    filter) with identical rows."""
+    streams through the CDF source with per-task pruning — the manifest
+    IS the spec. Pins: (a) matched reader bucketing → pruned task plans
+    with disjoint slices, each reading fewer bytes than one fallback
+    task (which pays the whole table); (b) the per-step diff rows equal
+    the batch feed; (c) a mismatched reader bucket count falls back
+    (full read + filter) with identical rows."""
     from kinesis_datastore_app_spark import txnlog
     from kinesis_datastore_app_spark.operators.cdc import (
         merge_into,
@@ -3131,6 +3029,14 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
 
     # bucket slices are disjoint WITHIN a version; across versions the
     # carried buckets deliberately share files (that IS the feature)
+    def nbytes(paths):
+        return sum(os.path.getsize(p) for p in paths)
+
+    # bytes, not just file counts: every fallback task reads the whole
+    # version (n× read amplification), every pruned task a strict slice
+    flat_bytes = {
+        v: nbytes(_snapshot_read_plan(root, v, ["k"], 0, 3)[0]) for v in (1, 2)
+    }
     seen = {1: set(), 2: set()}
     rows = []
     for b in range(n):
@@ -3139,8 +3045,13 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
             assert pruned, "manifest layout not recognized as pruned"
             assert not (set(paths) & seen[v])
             seen[v] |= set(paths)
+            assert nbytes(paths) < flat_bytes[v], (
+                f"task {b} at v{v} read {nbytes(paths)} bytes, not less "
+                f"than one fallback task's {flat_bytes[v]}"
+            )
         rows += list(_diff_rows(root, 1, 2, ["k"], ["v"], b, n))
     assert seen[1] & seen[2], "no carried files shared across versions"
+    assert all(nbytes(seen[v]) == flat_bytes[v] for v in (1, 2))
     batch = sorted(
         (r.k, r.v_before, r.v_after, r.change_type)
         for r in read_table_changes(spark, root, 1, 2, ["k"], ["v"]).collect()
@@ -3216,6 +3127,122 @@ def test_fast_rebase_preserves_skipping_maps(tmp_path, spark, monkeypatch):
         for r in spark.read.parquet(*chosen).filter(f"k = {kb}").collect()
     )
     assert got == [kb]
+
+
+def test_every_manifest_writer_builds_the_same_successor(
+    tmp_path, spark, monkeypatch
+):
+    """Every bucket-manifest writer commits its successor through
+    txnlog.successor_manifest, so each keeps the same things: the
+    recorded ``schema``, ``stats_cols``/``bloom_cols``, the batch-id
+    mark, and skipping entries for exactly the dirs it still references
+    (a branch publish keeps only the branch stems' entries, since the
+    bootstrap drops main's). No stem carries a ``_buckets.json`` spec
+    file — the manifest is the spec. One table runs through every
+    writer in turn, each checked against the contract."""
+    import uuid as _u
+
+    from kinesis_datastore_app_spark import txnlog
+    from kinesis_datastore_app_spark.operators import cdc
+
+    root = str(tmp_path / "t")
+
+    def rows(ks):
+        return spark.createDataFrame(
+            [(k, k * 10) for k in ks], "k bigint, v bigint"
+        )
+
+    def merge(src, at=root):
+        cdc.merge_into(
+            spark, at, src, ["k"], matched_update={"v": "t.v + s.v"}
+        )
+
+    def overlay():
+        # a merge into another bucket lands between this merge's read
+        # and its CAS, so this one commits as a disjoint overlay
+        ka = 7
+        kb = next(c for c in range(8, 200) if _bucket_of(c, 8) != _bucket_of(ka, 8))
+        real = txnlog.cas_commit
+        fired = []
+
+        def racing(r, v, payload):
+            if not fired:
+                fired.append(v)
+                merge(rows([ka]))
+            return real(r, v, payload)
+
+        monkeypatch.setattr(txnlog, "cas_commit", racing)
+        try:
+            merge(rows([kb]))
+        finally:
+            monkeypatch.setattr(txnlog, "cas_commit", real)
+
+    def dv_compact():
+        def dv_writer(prev):
+            name = f"dv-{_u.uuid4().hex[:6]}"
+            spark.createDataFrame([(11,)], "k bigint").write.parquet(
+                os.path.join(root, name)
+            )
+            return name
+
+        txnlog.commit_delete_vector(root, dv_writer)
+        cdc.compact_delete_vectors(spark, root)
+
+    def publish():
+        src = rows([3, 555]).selectExpr("*", "'b' AS tag")
+        merge(src, at=cdc.create_branch(root, "audit"))
+        cdc.publish_branch(spark, root, "audit")
+
+    schema = [["k", "bigint"], ["v", "bigint"]]
+    writers = [
+        ("append_rows sink", lambda: cdc.append_rows(
+            spark, root, rows(range(61, 81)), batch_id=6)),
+        ("compact_stems", lambda: cdc.compact_stems(spark, root)),
+        ("merge_into partial", lambda: merge(rows([7, 999]))),
+        ("merge_into overlay", overlay),
+        ("compact_delete_vectors partial", dv_compact),
+        ("rebucket_table", lambda: cdc.rebucket_table(spark, root, 16)),
+        ("evolve_table_schema", lambda: cdc.evolve_table_schema(
+            root, [("tag", "string")])),
+        ("publish_branch", publish),
+    ]
+    cdc.commit_bucketed_table(
+        spark, root, rows(range(1, 61)), ["k"], 8,
+        stats_cols=["k"], bloom_cols=["k"], extra={"batch_id": 5},
+    )
+    for name, write in writers:
+        v0 = txnlog.read_latest(root)[0]
+        write()
+        v, p = txnlog.read_latest(root)
+        assert v > v0, f"{name} published nothing"
+        if name == "evolve_table_schema":
+            schema = schema + [["tag", "string"]]
+        if name == "merge_into overlay":
+            assert p.get("rebase") == "disjoint-overlay", "overlay not taken"
+        spec = p["buckets"]
+        assert spec.get("schema") == schema, f"{name} lost the schema"
+        assert spec.get("stats_cols") == ["k"], name
+        assert spec.get("bloom_cols") == ["k"], name
+        assert p.get("batch_id") == 6, f"{name} lost the batch-id mark"
+        live = {d for e in spec["dirs"].values() for d in txnlog.entry_dirs(e)}
+        for m in ("stats", "nulls", "bloom"):
+            covered = {k.rsplit("/", 1)[0] for k in p.get(m) or {}}
+            assert covered, f"{name} dropped the {m} map"
+            if name == "publish_branch":
+                assert covered < live, f"{name}: {m} entries for unreferenced dirs"
+            else:
+                assert covered == live, f"{name}: {m} entries != referenced dirs"
+        spec_files = [
+            f for _, _, fs in os.walk(root) for f in fs if f == "_buckets.json"
+        ]
+        assert not spec_files, f"{name} wrote a bucket spec file"
+    state = {
+        r.k: (r.v, r.tag)
+        for r in cdc.read_table_state(spark, root, v).collect()
+    }
+    assert len(state) == 81 and 11 not in state  # 1..80, +555 +999, −11
+    assert state[7] == (210, None) and state[999] == (9990, None)
+    assert state[3] == (60, None) and state[555] == (5550, "b")
 
 
 def test_rebucket_guards(tmp_path, spark):
