@@ -190,6 +190,13 @@ def _apply_delete_vectors(
         dv = dv.filter(F.col(col).between(lo, hi))
     if key_point is not None and key_point[0] in dv.columns:
         dv = dv.filter(_point_pred(*key_point))
+    return _anti_join_null_safe(df, dv)
+
+
+def _anti_join_null_safe(df: DataFrame, dv: DataFrame) -> DataFrame:
+    """``df`` minus the rows whose values on every ``dv`` column equal a
+    ``dv`` row's, NULL-SAFE (NULL matches NULL) — the one deletion-vector
+    anti-join behind merge-on-read and DV compaction."""
     cond = None
     for c in dv.columns:
         term = df[c].eqNullSafe(dv[c])
@@ -1124,13 +1131,6 @@ def compact_delete_vectors(spark: SparkSession, root: str) -> tuple[int, str]:
         read_latest,
     )
 
-    def anti(df: DataFrame, dv: DataFrame) -> DataFrame:
-        cond = None
-        for c in dv.columns:
-            term = df[c].eqNullSafe(dv[c])
-            cond = term if cond is None else (cond & term)
-        return df.join(dv, on=cond, how="left_anti")
-
     _, probe = read_latest(root)
     spec = (probe or {}).get("buckets")
     dv_cols = None
@@ -1162,7 +1162,7 @@ def compact_delete_vectors(spark: SparkSession, root: str) -> tuple[int, str]:
                 prev,
                 list(dv_cols),
                 dv,
-                lambda slice_df: anti(slice_df, dv),
+                lambda slice_df: _anti_join_null_safe(slice_df, dv),
                 "compact-dv",
             )
             payload.pop("deletes", None)  # the vectors are applied
@@ -1176,7 +1176,7 @@ def compact_delete_vectors(spark: SparkSession, root: str) -> tuple[int, str]:
             raise ValueError("nothing to compact: empty-table base")
         df = spark.read.parquet(prev_dir)
         if dv_dirs:
-            df = anti(df, spark.read.parquet(*dv_dirs))
+            df = _anti_join_null_safe(df, spark.read.parquet(*dv_dirs))
         name = f"compact-dv-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(os.path.join(root, name))
         return name

@@ -26,7 +26,12 @@ DataSource API as the Kinesis connector (sources/kinesis_sim.py):
   way fall back, documented, to full-read + task-side filter;
 * the emitted rows carry the same before/after/change_type contract
   as read_table_changes plus the step's end ``version`` column, so a
-  downstream ``foreachBatch`` can apply them with cdc.apply_feed.
+  downstream ``foreachBatch`` can apply them with cdc.apply_feed;
+* ONE emission path: every task yields Arrow RecordBatches typed by
+  the stream's declared schema through pyspark's own StructType→Arrow
+  mapping (_step_record_batches), so any column type the ``keys`` /
+  ``vals`` options declare — timestamps and decimals included — is
+  emitted exactly as the JVM expects it.
 
 Reference tie: this is A10's TRIM_HORIZON scan (KinesisSync.java:
 94-101) lifted from a record stream to a TABLE's change history —
@@ -53,12 +58,19 @@ from kinesis_datastore_app_spark.registry import register
 
 
 def _parse_cols(spec: str) -> list[tuple[str, str]]:
-    """'a:bigint,b:string' -> [('a','bigint'), ('b','string')]."""
-    out = []
-    for part in spec.split(","):
-        name, typ = part.strip().split(":")
-        out.append((name, typ))
-    return out
+    """'a:bigint,d:decimal(10,2)' -> [('a','bigint'), ('d','decimal(10,2)')].
+    Splits on TOP-LEVEL commas only, so parameterized and nested types
+    keep theirs."""
+    parts, depth, cur = [], 0, ""
+    for ch in spec:
+        depth += (ch in "(<") - (ch in ")>")
+        if ch == "," and depth == 0:
+            parts.append(cur)
+            cur = ""
+        else:
+            cur += ch
+    parts.append(cur)
+    return [tuple(x.strip() for x in p.split(":", 1)) for p in parts]
 
 
 def _bucket_series(df, keys: list[str], n_buckets: int):
@@ -169,6 +181,16 @@ def write_bucketed_snapshot(
     )
 
 
+def _parquet_files(dirs) -> list[str]:
+    """Every parquet data file under ``dirs``, as full paths, through
+    txnlog's one recursive lister (a missing dir lists nothing)."""
+    import os
+
+    from kinesis_datastore_app_spark.txnlog import _walk_parquet_rel
+
+    return [os.path.join(d, f) for d in dirs for f in _walk_parquet_rel(d)]
+
+
 def _snapshot_read_plan(
     root: str, version: int, keys: list[str], bucket: int, n_buckets: int
 ) -> tuple[list[str] | None, bool]:
@@ -211,33 +233,15 @@ def _snapshot_read_plan(
         and b["n"] % n_buckets == 0
     ):
         dirs = b.get("dirs") or {}
-        paths = []
-        for s in range(bucket, b["n"], n_buckets):
-            for d in entry_dirs(dirs.get(str(s), [])):
-                full = os.path.join(root, d)
-                if not os.path.isdir(full):
-                    continue
-                paths += [
-                    os.path.join(full, f)
-                    for f in sorted(os.listdir(full))
-                    if f.endswith(".parquet")
-                ]
-        return paths, True
+        return _parquet_files(
+            os.path.join(root, d)
+            for s in range(bucket, b["n"], n_buckets)
+            for d in entry_dirs(dirs.get(str(s), []))
+        ), True
     all_dirs = data_paths(root, payload)
     if all_dirs is None:
         return None, False
-    paths = []
-    for d in all_dirs:
-        for dirpath, dirnames, filenames in os.walk(d):
-            dirnames[:] = sorted(
-                x for x in dirnames if not x.startswith((".", "_"))
-            )
-            paths += [
-                os.path.join(dirpath, f)
-                for f in sorted(filenames)
-                if f.endswith(".parquet")
-            ]
-    return paths, False
+    return _parquet_files(all_dirs), False
 
 
 def _append_step_new_paths(
@@ -301,18 +305,11 @@ def _append_step_new_paths(
             return None  # an entry was rewritten: merge/compact, not append
         if len(cur) > len(prev):
             new_by_bucket[bk] = cur[len(prev):]
-    paths: list[str] = []
-    for s in range(bucket, b["n"], n_buckets):
-        for d in new_by_bucket.get(str(s), ()):
-            full = os.path.join(root, d)
-            if not os.path.isdir(full):
-                continue
-            paths += [
-                os.path.join(full, f)
-                for f in sorted(os.listdir(full))
-                if f.endswith(".parquet")
-            ]
-    return paths
+    return _parquet_files(
+        os.path.join(root, d)
+        for s in range(bucket, b["n"], n_buckets)
+        for d in new_by_bucket.get(str(s), ())
+    )
 
 
 def _read_arrow(paths: list[str]):
@@ -354,94 +351,26 @@ def _read_frame(paths: list[str]):
     return _read_arrow(paths).to_pandas(types_mapper=pd.ArrowDtype)
 
 
-def _diff_rows(root, v_from, v_to, keys, vals, bucket, n_buckets):
-    """Yield change rows for one (version step, bucket): the same
-    classification contract as cdc.read_table_changes — insert/delete/
-    update by key presence and value equality, unchanged skipped —
-    computed per-bucket in pandas. Fully VECTORIZED (round-11 probe:
-    the first per-row-loop form read exponent 0.729 at 16× because
-    Python touched every unchanged row; the outer merge + vectorized
-    compare below classifies columnar and only the change subset ever
-    reaches a Python loop). Value columns absent on one side (schema
-    evolution) read as all-NULL, mirroring _null_pad_evolved; NULL
-    semantics: both-null compares equal, null-vs-value is a change.
-
-    BLIND-APPEND steps short-circuit (round 13): when the step is a
-    pure manifest extension (_append_step_new_paths), the feed is the
-    new stems' rows emitted as inserts directly — no before-side read,
-    no merge — which is both the O(appended slice) cost profile and
-    the only correct semantics on multiset/event-log tables."""
-    import numpy as np
-    import pandas as pd
-
-    fast = _append_step_new_paths(root, v_from, v_to, keys, bucket, n_buckets)
-    if fast is not None:
-        if not fast:
-            return  # append step with no new rows in this bucket slice
-        df = _read_frame(fast)
-        for v in vals:
-            if v not in df.columns:
-                df = df.assign(**{v: pd.NA})
-        df = df[[*keys, *vals]]
-
-        def conv(x):
-            if isinstance(x, (float, np.floating)):
-                return float(x)  # NaN VALUES survive, like the diff path
-            return None if pd.isna(x) else x
-
-        nk = len(keys)
-        for t in df.itertuples(index=False):
-            row = [conv(x) for x in t]
-            yield tuple(
-                row[:nk]
-                + [None] * len(vals)  # before side: the row did not exist
-                + row[nk:]
-                + ["insert", v_to]
-            )
-        return
-
-    out, labels = _diff_frame(root, v_from, v_to, keys, vals, bucket, n_buckets)
-
-    for t, lab in zip(out.itertuples(index=False), labels):
-        # NaN is a float VALUE and must survive to the emitted row (the
-        # batch feed emits it too); every other NA sentinel (pd.NA for
-        # Arrow nulls, NaT) renders as SQL NULL
-        yield tuple(
-            [
-                float(x)
-                if isinstance(x, (float, np.floating))
-                else (None if pd.isna(x) else x)
-                for x in t
-            ]
-            + [lab, v_to]
-        )
-
-
 def _diff_frame(root, v_from, v_to, keys, vals, bucket, n_buckets):
-    """The keyed-diff pandas core of _diff_rows: returns ``(out,
-    labels)`` — the changed subframe (columns keys + vals_before +
-    vals_after) and its aligned change_type labels — shared by the
-    row-tuple emission path above and the Arrow-batch emission path
-    (_step_record_batches), so the classification semantics (NULL vs
-    NaN, indicator-based insert/delete, value inequality) exist in
-    exactly one place."""
+    """The keyed diff of one (version step, bucket) in pandas: returns
+    ``(out, labels)`` — the changed subframe (columns keys +
+    vals_before + vals_after) and its aligned change_type labels. The
+    same classification contract as cdc.read_table_changes:
+    insert/delete/update by key presence and value equality, unchanged
+    rows skipped. Fully VECTORIZED (round-11 probe: a per-row-loop
+    form read exponent 0.729 at 16x because Python touched every
+    unchanged row). Value columns absent on one side (schema
+    evolution) read as all-NULL, mirroring _null_pad_evolved; NULL
+    semantics: both-null compares equal, null-vs-value is a change,
+    and a float NaN is a VALUE distinct from NULL (see masks)."""
     import pandas as pd
 
-    def side(version, other=None):
+    def side(version):
         plan, pruned = _snapshot_read_plan(
             root, version, keys, bucket, n_buckets
         )
-        if plan is None or not plan:
-            # empty-table version, or a manifest whose slice for
-            # this bucket holds no rows: zero rows with the other
-            # side's columns (there is always at least one non-empty
-            # side across the whole step, else there'd be nothing to
-            # diff; an individual BUCKET may legitimately be empty on
-            # both sides — the merge then yields nothing)
-            df = other.iloc[0:0] if other is not None else pd.DataFrame(
-                columns=[*keys, *vals]
-            )
-            return df
+        if not plan:
+            return None  # empty-table version, or an empty bucket slice
         df = _read_frame(plan)
         for v in vals:
             if v not in df.columns:
@@ -453,8 +382,15 @@ def _diff_frame(root, v_from, v_to, keys, vals, bucket, n_buckets):
             return df
         return df[_bucket_series(df, keys, n_buckets) == bucket]
 
-    a = side(v_from)
-    b = side(v_to, other=a)
+    a, b = side(v_from), side(v_to)
+    # an empty side is the other side's zero-row frame, so the merge
+    # pads the missing image with TYPED nulls — an untyped empty frame
+    # padded it with object NaN, which emitted NaN before-images for
+    # inserts into a bucket empty at v_from
+    if a is None and b is None:
+        a = b = pd.DataFrame(columns=[*keys, *vals])
+    a = b.iloc[0:0] if a is None else a
+    b = a.iloc[0:0] if b is None else b
     m = a.merge(
         b, on=keys, how="outer", suffixes=("_before", "_after"), indicator=True
     )
@@ -497,70 +433,12 @@ def _diff_frame(root, v_from, v_to, keys, vals, bucket, n_buckets):
     return changed[cols], change[changed.index]
 
 
-# --- Arrow-batch emission (optimization round 13) -------------------------
-#
-# A Python DataSource read() may yield pyarrow RecordBatches instead of
-# row tuples (Spark 4's records_to_arrow_batches passes them through
-# verbatim) — removing the per-row/per-cell Python loop AND the
-# pickle-per-row boundary cost the guide's §4 exists for. Measured at
-# sf0.1: source_cdf_stream_append addBatch 0.55 s → ~0.2 s per 50 k-row
-# micro-batch. The row-tuple path (_diff_rows) is kept verbatim as the
-# fallback for column types without a verified Spark↔Arrow mapping here
-# and as the unit-testable contract surface.
-
-_ARROW_SAFE_SPARK_TYPES = {
-    "bigint": "LongType",
-    "long": "LongType",
-    "int": "IntegerType",
-    "integer": "IntegerType",
-    "smallint": "ShortType",
-    "tinyint": "ByteType",
-    "string": "StringType",
-    "double": "DoubleType",
-    "float": "FloatType",
-    "real": "FloatType",
-    "boolean": "BooleanType",
-    "date": "DateType",
-}
-
-
-def _stream_arrow_schema(keys_t, vals_t):
-    """The stream's declared schema as an Arrow schema, via Spark's own
-    StructType→Arrow mapping (so the yielded batches match exactly what
-    the JVM expects for this source's schema string) — or None when any
-    column's type lacks a verified mapping (timestamps, decimals,
-    complex types), in which case read() falls back to the row path."""
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    def spark_type(name: str):
-        cls = _ARROW_SAFE_SPARK_TYPES.get(name.strip().lower())
-        return getattr(T, cls)() if cls else None
-
-    fields = []
-    for n, t in keys_t:
-        st = spark_type(t)
-        if st is None:
-            return None
-        fields.append(T.StructField(n, st))
-    for suffix in ("_before", "_after"):
-        for n, t in vals_t:
-            st = spark_type(t)
-            if st is None:
-                return None
-            fields.append(T.StructField(f"{n}{suffix}", st))
-    fields.append(T.StructField("change_type", T.StringType()))
-    fields.append(T.StructField("version", T.LongType()))
-    return to_arrow_schema(T.StructType(fields))
-
-
 def _series_to_arrow(s, typ):
-    """One pandas column → an Arrow array of ``typ``, preserving the
-    row path's exact NULL-vs-NaN semantics: ArrowDtype storage keeps
-    nulls and NaN values distinct natively; numpy-float storage (where
-    NULL physically IS NaN) emits NaN VALUES, matching conv(float);
-    everything else maps NA sentinels to null and keeps float NaN as a
-    value."""
+    """One pandas column → an Arrow array of ``typ``, keeping the
+    diff's NULL-vs-NaN semantics: ArrowDtype storage keeps nulls and
+    NaN values distinct natively; numpy-float storage (where NULL
+    physically IS NaN) emits NaN VALUES; everything else maps NA
+    sentinels to null and keeps float NaN as a value."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -580,77 +458,77 @@ def _series_to_arrow(s, typ):
 
 
 def _step_record_batches(
-    root, v_from, v_to, keys_t, vals_t, bucket, n_buckets, schema
+    root, v_from, v_to, keys, vals, bucket, n_buckets, schema
 ):
-    """Arrow-batch twin of _diff_rows: same feed, emitted columnar.
-    Pure-append steps never touch pandas at all — the new stems' Arrow
-    table is re-shaped into the feed schema with null before-images;
-    keyed-diff steps reuse _diff_frame (one definition of the
-    classification) and convert its changed subframe column-wise."""
+    """The feed of one (version step, bucket) as Arrow RecordBatches
+    typed by ``schema`` — the reader's declared Spark schema through
+    pyspark's own StructType→Arrow mapping (to_arrow_schema, the one
+    records_to_arrow_batches applies to row tuples), so every declared
+    column type (timestamps and decimals included) is the exact Arrow
+    type the JVM expects. This is the source's ONE emission path: no
+    per-row Python loop, no pickle-per-row boundary (round 13 measured
+    source_cdf_stream_append's addBatch 0.55 s → ~0.2 s per 50 k-row
+    micro-batch at sf0.1 against row tuples).
+
+    BLIND-APPEND steps (_append_step_new_paths) never touch pandas:
+    the new stems' Arrow table is re-shaped into the feed with null
+    before-images and insert labels — the O(appended slice) cost
+    profile and the only correct semantics on multiset/event-log
+    tables (a re-appended duplicate row surfaces as an insert).
+    Keyed-diff steps convert _diff_frame's changed subframe
+    column-wise."""
     import pyarrow as pa
 
-    keys = [n for n, _ in keys_t]
-    vals = [n for n, _ in vals_t]
-    nk, nv = len(keys), len(vals)
-
+    types = schema.types
     fast = _append_step_new_paths(root, v_from, v_to, keys, bucket, n_buckets)
     if fast is not None:
         if not fast:
             return  # append step with no new rows in this bucket slice
         t = _read_arrow(fast)
         n = t.num_rows
-        if n == 0:
-            return
-        cols = []
-        for i, name in enumerate(keys):
-            cols.append(t.column(name).cast(schema.field(i).type))
-        for j in range(nv):  # before side: the rows did not exist
-            cols.append(pa.nulls(n, schema.field(nk + j).type))
-        for j, name in enumerate(vals):
-            ftyp = schema.field(nk + nv + j).type
-            if name in t.column_names:
-                cols.append(t.column(name).cast(ftyp))
-            else:
-                cols.append(pa.nulls(n, ftyp))  # schema-evolution pad
-        cols.append(pa.repeat(pa.scalar("insert", type=pa.string()), n))
-        cols.append(pa.repeat(pa.scalar(v_to, type=pa.int64()), n))
-        tbl = pa.Table.from_arrays(cols, schema=schema).combine_chunks()
-        yield from tbl.to_batches(max_chunksize=1 << 16)
-        return
-
-    out, labels = _diff_frame(root, v_from, v_to, keys, vals, bucket, n_buckets)
-    n = len(out)
+        nk, nv = len(keys), len(vals)
+        # before-images are null (the rows did not exist); an after
+        # column absent from the new stems is the schema-evolution pad
+        cols = [t.column(k).cast(types[i]) for i, k in enumerate(keys)]
+        cols += [pa.nulls(n, types[nk + j]) for j in range(nv)]
+        cols += [
+            t.column(v).cast(typ) if v in t.column_names else pa.nulls(n, typ)
+            for v, typ in zip(vals, types[nk + nv:])
+        ]
+        labels = pa.repeat(pa.scalar("insert", type=pa.string()), n)
+    else:
+        out, change = _diff_frame(
+            root, v_from, v_to, keys, vals, bucket, n_buckets
+        )
+        n = len(out)
+        cols = [_series_to_arrow(out[c], typ) for c, typ in zip(out, types)]
+        labels = pa.array(change.tolist(), type=pa.string(), from_pandas=False)
     if n == 0:
         return
-    cols = [
-        _series_to_arrow(out[c], schema.field(i).type)
-        for i, c in enumerate(out.columns)
-    ]
-    cols.append(pa.array(labels.tolist(), type=pa.string(), from_pandas=False))
-    cols.append(pa.repeat(pa.scalar(v_to, type=pa.int64()), n))
+    cols += [labels, pa.repeat(pa.scalar(v_to, type=pa.int64()), n)]
     tbl = pa.Table.from_arrays(cols, schema=schema).combine_chunks()
     yield from tbl.to_batches(max_chunksize=1 << 16)
 
 
 class _VersionStepBucket(InputPartition):
-    def __init__(self, root, v_from, v_to, keys_t, vals_t, bucket, n_buckets):
+    def __init__(
+        self, root, v_from, v_to, keys, vals, bucket, n_buckets, schema
+    ):
         self.root, self.v_from, self.v_to = root, v_from, v_to
-        # typed (name, sqltype) specs: the Arrow emission path needs the
-        # types to build the exact schema Spark expects; name-only views
-        # derive locally where needed
-        self.keys_t, self.vals_t = keys_t, vals_t
+        self.keys, self.vals = keys, vals
         self.bucket, self.n_buckets = bucket, n_buckets
+        self.schema = schema  # the reader's Arrow schema
 
 
 class _CdfStreamReader(DataSourceStreamReader):
-    """Version-offset stream reader; see module docstring."""
+    """Version-offset stream reader; see module docstring. ``schema`` is
+    the stream's Arrow schema (CdfStreamDataSource.streamReader)."""
 
-    def __init__(self, options):
+    def __init__(self, options, schema):
         self.root = options["path"]
-        self.keys_t = _parse_cols(options["keys"])
-        self.vals_t = _parse_cols(options["vals"])
-        self.keys = [n for n, _ in self.keys_t]
-        self.vals = [n for n, _ in self.vals_t]
+        self.keys = [n for n, _ in _parse_cols(options["keys"])]
+        self.vals = [n for n, _ in _parse_cols(options["vals"])]
+        self.schema = schema
         self.start_version = int(options.get("start_version", 1))
         self.per_batch = int(options.get("versions_per_batch", 1))
         self.n_buckets = int(options.get("buckets", 4))
@@ -715,36 +593,18 @@ class _CdfStreamReader(DataSourceStreamReader):
         self._latest = max(getattr(self, "_latest", lo), hi)
         return [
             _VersionStepBucket(
-                self.root, v, v + 1, self.keys_t, self.vals_t, b, self.n_buckets
+                self.root, v, v + 1, self.keys, self.vals, b, self.n_buckets,
+                self.schema,
             )
             for v in range(max(lo, self._floor), hi)
             for b in range(self.n_buckets)
         ]
 
     def read(self, partition: _VersionStepBucket):
-        # Arrow-batch emission when every column type has a verified
-        # Spark↔Arrow mapping (the common case); row tuples otherwise.
-        schema = _stream_arrow_schema(partition.keys_t, partition.vals_t)
-        if schema is not None:
-            yield from _step_record_batches(
-                partition.root,
-                partition.v_from,
-                partition.v_to,
-                partition.keys_t,
-                partition.vals_t,
-                partition.bucket,
-                partition.n_buckets,
-                schema,
-            )
-            return
-        yield from _diff_rows(
-            partition.root,
-            partition.v_from,
-            partition.v_to,
-            [n for n, _ in partition.keys_t],
-            [n for n, _ in partition.vals_t],
-            partition.bucket,
-            partition.n_buckets,
+        p = partition
+        return _step_record_batches(
+            p.root, p.v_from, p.v_to, p.keys, p.vals, p.bucket, p.n_buckets,
+            p.schema,
         )
 
     def commit(self, end: dict) -> None:
@@ -767,7 +627,9 @@ class CdfStreamDataSource(DataSource):
         return ", ".join(cols)
 
     def streamReader(self, schema) -> _CdfStreamReader:
-        return _CdfStreamReader(self.options)
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return _CdfStreamReader(self.options, to_arrow_schema(schema))
 
 
 # The oracle recomputes all three fixture states (slice 0 / slices 0,1 /

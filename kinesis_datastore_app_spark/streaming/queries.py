@@ -35,14 +35,10 @@ from pyspark.sql import functions as F
 from kinesis_datastore_app_spark.numerics import dsum, sql_dsum
 from kinesis_datastore_app_spark.registry import register
 
-# Hoisted to the base layer (txnlog.py) in round 13 so cdc.append_rows'
-# blind-append sink mode shares the exact same mark semantics; aliased
-# because every foreachBatch sink in this module grew up with these
-# names.
 from kinesis_datastore_app_spark.txnlog import (
-    BatchAlreadyApplied as _BatchAlreadyApplied,
+    BatchAlreadyApplied,
     PendingDeleteVectors,
-    sink_batch_hwm as _sink_batch_hwm,
+    sink_batch_hwm,
 )
 from kinesis_datastore_app_spark.streaming.source_factory import (
     EVENTS_SCHEMA,
@@ -730,10 +726,10 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
     """Commit ONE micro-batch as a txnlog version — the Delta
     streaming-sink contract (round-10 verdict item 1), composing the
     engine's own pieces: a per-batch associative merge (additive count,
-    (ts, event_id)-argmax last-writer-wins), the copy-on-write snapshot
-    discipline of txnlog.commit_snapshot, and the batch-id idempotence
-    of stream_foreach_batch. The batch id is recorded IN the version
-    payload, so exactly-once lands structurally:
+    (ts, event_id)-argmax last-writer-wins) committed through ONE
+    txnlog.commit_snapshot call with ``batch_id``. The batch id is
+    recorded IN the version payload, so exactly-once lands
+    structurally:
 
     * foreachBatch delivers batches at-least-once with monotonically
       increasing ids; a redelivered batch finds ``prev["batch_id"] >=
@@ -744,11 +740,14 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
       a crash before the version file lands leaves the prior version
       live and at most one unreferenced loser dir (vacuum's orphan
       sweep collects it); once it lands, the redelivery skips it;
-    * because the check rides INSIDE occ_commit's apply, it re-runs on
-      every CAS retry — two racing redeliveries of the same batch
+    * because the check rides INSIDE commit_snapshot's apply, it re-runs
+      on every CAS retry — two racing redeliveries of the same batch
       serialize, and the loser sees the winner's batch id and stops;
       a foreign commit between the read and the CAS makes the sink
-      rebase onto it — multi-writer safety comes from the CAS alone.
+      rebase onto it — multi-writer safety comes from the CAS alone;
+    * commit_snapshot refuses a bucket-manifest table (the merge would
+      read it as empty and overwrite it) and one carrying pending
+      deletion vectors (the merge would resurrect purged rows).
 
     Downstream, the table is a first-class txnlog citizen: time-travel
     reads per micro-batch version, cdc.read_table_changes between any
@@ -763,7 +762,7 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
     import os
     import uuid
 
-    from kinesis_datastore_app_spark.txnlog import occ_commit, snapshot_path
+    from kinesis_datastore_app_spark.txnlog import commit_snapshot
 
     sess = batch_df.sparkSession
     delta = batch_df.groupBy("user_id").agg(
@@ -774,21 +773,8 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
         F.count(F.lit(1)).alias("n_events"),
     )
 
-    def apply(prev: dict | None, prev_v: int) -> dict:
-        if _sink_batch_hwm(root, prev, prev_v) >= batch_id:
-            raise _BatchAlreadyApplied
-        if prev is not None and prev.get("deletes"):
-            # pending deletion vectors (round-11 review): this merge
-            # reads the PHYSICAL prev snapshot and commits a payload
-            # without 'deletes' — it would silently resurrect purged
-            # rows. A DV'd sink table must be compacted first
-            # (commit_snapshot's mor_merge_fn applies the vectors).
-            raise PendingDeleteVectors(
-                f"table at {root} carries pending deletion vectors; "
-                "compact them (mor_merge_fn) before streaming more batches"
-            )
+    def merge(prev_dir: str | None) -> str:
         cur = delta
-        prev_dir = snapshot_path(root, prev)
         if prev_dir is not None:
             cur = (
                 sess.read.parquet(prev_dir)
@@ -802,11 +788,11 @@ def txnlog_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
             )
         name = f"snap-b{batch_id}-{uuid.uuid4().hex[:8]}"
         cur.write.mode("overwrite").parquet(os.path.join(root, name))
-        return {"snapshot": name, "batch_id": batch_id}
+        return name
 
     try:
-        occ_commit(root, apply)
-    except _BatchAlreadyApplied:
+        commit_snapshot(root, merge, batch_id=batch_id)
+    except BatchAlreadyApplied:
         pass  # exactly-once: this batch's version is already in the log
 
 
@@ -884,7 +870,7 @@ def append_sink_batch(root: str, batch_df: DataFrame, batch_id: int) -> None:
 
     try:
         append_rows(batch_df.sparkSession, root, batch_df, batch_id=batch_id)
-    except _BatchAlreadyApplied:
+    except BatchAlreadyApplied:
         pass  # exactly-once: this batch's stem is already in the log
 
 
@@ -1171,8 +1157,8 @@ def _apply_feed_batch_persisted(
         return state
 
     def apply(prev: dict | None, prev_v: int) -> dict:
-        if _sink_batch_hwm(root, prev, prev_v) >= batch_id:
-            raise _BatchAlreadyApplied
+        if sink_batch_hwm(root, prev, prev_v) >= batch_id:
+            raise BatchAlreadyApplied
         if prev is not None and prev.get("deletes"):
             # the partial payload would drop the deletes list, silently
             # resurrecting purged rows in carried buckets — same guard
@@ -1209,7 +1195,7 @@ def _apply_feed_batch_persisted(
 
     try:
         occ_commit(root, apply)
-    except _BatchAlreadyApplied:
+    except BatchAlreadyApplied:
         pass  # exactly-once: this batch's version is already in the log
 
 

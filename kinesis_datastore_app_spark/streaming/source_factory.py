@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from kinesis_datastore_app_spark.catalog import (
     _ensure_engine_confs,
+    atomic_publish_dir,
     scratch_dir,
     table,
 )
@@ -86,6 +87,20 @@ def _gc_superseded_names(tag_dir: str, family: str, keep: str) -> None:
         shutil.rmtree(sib, ignore_errors=True)
 
 
+def _write_one_file(df: DataFrame, tmp: str, name: str, mtime: int) -> None:
+    """Write ``df`` as the single parquet file ``tmp/name`` with a fixed
+    mtime (FileStreamSource replays in mtime order, so the order is part
+    of the fixture, not of when the build ran). Spark's write stages
+    under ``tmp``, so a failed build leaves nothing outside the dir
+    catalog.atomic_publish_dir removes."""
+    sub = os.path.join(tmp, "_part")
+    df.coalesce(1).write.mode("overwrite").parquet(sub)
+    dst = os.path.join(tmp, name)
+    shutil.move(glob.glob(f"{sub}/part-*.parquet")[0], dst)
+    shutil.rmtree(sub)
+    os.utime(dst, (mtime, mtime))
+
+
 def events_stream_dir(
     spark: SparkSession, sf_dir: str, copies: int = 1, files: int = 1
 ) -> str:
@@ -101,45 +116,31 @@ def events_stream_dir(
     Fixed, strictly increasing mtimes make the FileStreamSource replay
     order part of the fixture, copy-major then file-major.
 
-    Publication is atomic: everything lands in a temp dir which is then
-    renamed into place, so a crash mid-build can never leave a partially
-    written dir that later runs would silently reuse. A failed publish
-    that is NOT a lost race re-raises instead of returning a path that
-    was never created.
+    Publication goes through catalog.atomic_publish_dir, like every
+    replay dir here: the build lands in a temp dir renamed into place,
+    so a crash mid-build never leaves a partial dir later runs would
+    reuse, and a failed build removes its temp dir.
     """
     _ensure_engine_confs(spark)
     name = f"events_stream_v2_c{copies}_f{files}"
     tag_dir = scratch_dir(sf_dir, "events")  # creates dir + _SRC marker
     path = f"{tag_dir}/{name}"
-    if not os.path.exists(path):
+
+    def build(tmp: str) -> None:
         _gc_superseded_names(tag_dir, "events_stream_v", "events_stream_v2_")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp)
         src = table(spark, sf_dir, "events")
         fidx = F.pmod(F.col("event_id"), F.lit(files))
-        n = 0
         for c in range(copies):
             for i in range(files):
-                sub = f"{tmp}.part"
-                (
-                    src.filter(fidx == i)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(sub)
+                _write_one_file(
+                    src.filter(fidx == i),
+                    tmp,
+                    f"copy{c:02d}-file{i:03d}.parquet",
+                    1_700_000_000 + (c * files + i) * 10,
                 )
-                part = glob.glob(f"{sub}/part-*.parquet")[0]
-                dst = f"{tmp}/copy{c:02d}-file{i:03d}.parquet"
-                shutil.move(part, dst)
-                shutil.rmtree(sub)
-                os.utime(dst, (1_700_000_000 + n * 10, 1_700_000_000 + n * 10))
-                n += 1
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # lost a concurrent race — the winner's dir is complete
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(path):
-                raise  # genuine publish failure: surface the cause here
+
+    atomic_publish_dir(path, build)
     return path
 
 
@@ -250,8 +251,8 @@ def events_batched_stream_dir(spark: SparkSession, sf_dir: str, batches: int = 4
     _ensure_engine_confs(spark)
     tag_dir = scratch_dir(sf_dir, "events")  # creates dir + _SRC marker
     path = f"{tag_dir}/events_stream_nt{batches}d2"
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+
+    def build(tmp: str) -> None:
         os.makedirs(tmp)
         src = table(spark, sf_dir, "events")
         q = F.ntile(batches).over(_W.orderBy("ts", "event_id")) - 1
@@ -261,29 +262,16 @@ def events_batched_stream_dir(spark: SparkSession, sf_dir: str, batches: int = 4
         staged = src.withColumn("b", b).persist()
         try:
             for i in range(batches):
-                sub = f"{tmp}.part{i}"
-                (
-                    staged.filter(F.col("b") == i)
-                    .drop("b")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(sub)
+                _write_one_file(
+                    staged.filter(F.col("b") == i).drop("b"),
+                    tmp,
+                    f"batch-{i:03d}.parquet",
+                    1_700_000_000 + i * 10,
                 )
-                part = glob.glob(f"{sub}/part-*.parquet")[0]
-                dst = f"{tmp}/batch-{i:03d}.parquet"
-                shutil.move(part, dst)
-                shutil.rmtree(sub)
-                # fixed, strictly increasing mtimes: processing order is
-                # part of the fixture, not of when this builder ran
-                os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
         finally:
             staged.unpersist()
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(path):
-                raise  # genuine publish failure: surface the cause here
+
+    atomic_publish_dir(path, build)
     return path
 
 
@@ -321,14 +309,16 @@ def events_stream_flush_dir(spark: SparkSession, sf_dir: str, files: int = 1) ->
     name = f"events_stream_flush_v2_f{files}"
     tag_dir = scratch_dir(sf_dir, "events")
     path = f"{tag_dir}/{name}"
-    if not os.path.exists(path):
-        _gc_superseded_names(tag_dir, "events_stream_flush_v", "events_stream_flush_v2_")
+
+    def build(tmp: str) -> None:
+        _gc_superseded_names(
+            tag_dir, "events_stream_flush_v", "events_stream_flush_v2_"
+        )
         base = events_stream_dir(spark, sf_dir, copies=1, files=files)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp)
         for f in sorted(glob.glob(f"{base}/*.parquet")):
-            dst = os.path.join(tmp, os.path.basename(f))
-            shutil.copy2(f, dst)  # copy2 keeps the fixture mtime ordering
+            # copy2 keeps the fixture mtime ordering
+            shutil.copy2(f, os.path.join(tmp, os.path.basename(f)))
         max_ts = table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
         for s, hours in ((1, 10), (2, 20)):
             flush_ts = max_ts + datetime.timedelta(hours=hours)
@@ -339,18 +329,13 @@ def events_stream_flush_dir(spark: SparkSession, sf_dir: str, files: int = 1) ->
                 ],
                 EVENTS_SCHEMA,
             )
-            sub = f"{tmp}.part"
-            sent.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = glob.glob(f"{sub}/part-*.parquet")[0]
-            dst = f"{tmp}/zz-flush-sentinel-{s}.parquet"
-            shutil.move(part, dst)
-            shutil.rmtree(sub)
             # strictly after every base file, in sentinel order
-            os.utime(dst, (1_800_000_000 + s * 10, 1_800_000_000 + s * 10))
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(path):
-                raise
+            _write_one_file(
+                sent,
+                tmp,
+                f"zz-flush-sentinel-{s}.parquet",
+                1_800_000_000 + s * 10,
+            )
+
+    atomic_publish_dir(path, build)
     return path

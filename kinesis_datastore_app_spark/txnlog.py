@@ -874,6 +874,7 @@ def commit_snapshot(
     clock: Callable[[], float] | None = None,
     bloom_cols: list[str] | None = None,
     enforce_schema: bool = False,
+    batch_id: int | None = None,
 ) -> tuple[int, str]:
     """OCC commit of a copy-on-write snapshot: ``merge_fn(prev_snapshot_dir)``
     must produce a complete NEW snapshot under ``root`` (unique name, its
@@ -916,7 +917,12 @@ def commit_snapshot(
     when one exists, so a maintenance commit (compaction, repair) on a
     streaming-sink table never erases the exactly-once ledger — a
     redelivered micro-batch still sees the mark even after older sink
-    commits are vacuumed away.
+    commits are vacuumed away. ``batch_id`` (a foreachBatch sink's
+    commit): checked against the high-water mark (sink_batch_hwm)
+    inside the apply, BEFORE merge_fn runs — a redelivered batch
+    raises BatchAlreadyApplied and publishes nothing — and stamped into
+    the payload as the new mark; the check re-runs on every CAS retry,
+    so racing redeliveries serialize.
 
     ``enforce_schema``: reject (ConstraintViolation, staged dir
     removed) any commit that DROPS or RETYPES a column the previous
@@ -938,6 +944,10 @@ def commit_snapshot(
                 "commit_snapshot's merge_fn sees one snapshot dir — use "
                 "the bucketed commit paths instead"
             )
+        if batch_id is not None and (
+            sink_batch_hwm(root, prev, prev_v) >= batch_id
+        ):
+            raise BatchAlreadyApplied
         dvs = [] if prev is None else list(prev.get("deletes") or [])
         if mor_merge_fn is not None:
             name = mor_merge_fn(
@@ -947,9 +957,10 @@ def commit_snapshot(
         else:
             if dvs:
                 raise PendingDeleteVectors(
-                    f"latest version at {root} carries {len(dvs)} pending "
-                    "deletion vector(s); a plain merge_fn would resurrect "
-                    "purged rows — pass mor_merge_fn(prev_dir, dv_dirs)"
+                    f"latest version at {root} carries pending deletion "
+                    f"vectors ({len(dvs)}); a plain merge_fn would "
+                    "resurrect purged rows — pass mor_merge_fn(prev_dir, "
+                    "dv_dirs), or compact them first"
                 )
             name = merge_fn(snapshot_path(root, prev))
         try:
@@ -973,7 +984,9 @@ def commit_snapshot(
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
             raise
         payload = {"snapshot": name, "writer": uuid.uuid4().hex[:8]}
-        if prev is not None and "batch_id" in prev:
+        if batch_id is not None:
+            payload["batch_id"] = batch_id
+        elif prev is not None and "batch_id" in prev:
             payload["batch_id"] = prev["batch_id"]
         if stats_cols:
             payload["stats"] = collect_file_stats(

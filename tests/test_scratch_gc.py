@@ -10,6 +10,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from kinesis_datastore_app_spark import catalog
 
 
@@ -267,6 +269,37 @@ def test_replay_dir_gc_spares_other_families_and_parameterizations(
         "young superseded version reaped — a live older-code stream "
         "loses its replay dir (grace gate violated)"
     )
+
+
+def test_replay_dir_failed_build_leaves_no_staging(
+    spark, tmp_path, monkeypatch
+):
+    """Every events replay-dir build publishes through
+    catalog.atomic_publish_dir, so a build that raises (here: the
+    events table cannot be resolved) leaves neither a ``.tmp-`` staging
+    dir nor a ``.part`` write dir behind, and publishes nothing."""
+    import kinesis_datastore_app_spark.catalog as catalog_mod
+    from kinesis_datastore_app_spark.streaming import source_factory as sf_mod
+
+    sfd = _copy_fixture(tmp_path, tables=("events",))
+    monkeypatch.setattr(catalog_mod, "SCRATCH", str(tmp_path / "scratch"))
+
+    def broken_table(*a, **k):
+        raise RuntimeError("simulated source failure")
+
+    monkeypatch.setattr(sf_mod, "table", broken_table)
+    tag_dir = catalog_mod.scratch_dir(sfd, "events")
+    for build in (
+        lambda: sf_mod.events_stream_dir(spark, sfd, files=2),
+        lambda: sf_mod.events_batched_stream_dir(spark, sfd, batches=2),
+        lambda: sf_mod.events_stream_flush_dir(spark, sfd, files=2),
+    ):
+        with pytest.raises(RuntimeError, match="simulated source failure"):
+            build()
+        left = [
+            d for d in os.listdir(tag_dir) if d.startswith("events_stream")
+        ]
+        assert left == [], f"failed build left {left}"
 
 
 def test_published_parquet_reap_family_scoped_and_age_gated(

@@ -1148,14 +1148,58 @@ def test_txnlog_sink_batch_id_survives_interleaved_commits(tmp_path, spark):
     assert got == expect
 
 
+def _cdf_schema(keys, vals, types=None):
+    """The CDF stream's Arrow schema for ``keys``/``vals`` through
+    pyspark's own StructType→Arrow mapping, as the source computes it
+    (CdfStreamDataSource.streamReader). ``types`` maps a column to its
+    Spark type; unlisted columns are bigint."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    types = types or {}
+
+    def field(name, col):
+        return T.StructField(name, types.get(col, T.LongType()))
+
+    return to_arrow_schema(
+        T.StructType(
+            [field(k, k) for k in keys]
+            + [field(f"{v}_before", v) for v in vals]
+            + [field(f"{v}_after", v) for v in vals]
+            + [
+                T.StructField("change_type", T.StringType()),
+                T.StructField("version", T.LongType()),
+            ]
+        )
+    )
+
+
+def _cdf_step_rows(root, v_from, v_to, keys, vals, n_buckets=4, types=None):
+    """One version step's CDF stream feed over every reader bucket, as
+    row tuples (keys, vals_before, vals_after, change_type, version):
+    the source's Arrow batches flattened with to_pylist, so a NULL
+    reads None and a float NaN value reads as a float nan."""
+    from kinesis_datastore_app_spark.sources.cdf_stream import (
+        _step_record_batches,
+    )
+
+    schema = _cdf_schema(keys, vals, types)
+    return [
+        tuple(r.values())
+        for b in range(n_buckets)
+        for batch in _step_record_batches(
+            root, v_from, v_to, keys, vals, b, n_buckets, schema
+        )
+        for r in batch.to_pylist()
+    ]
+
+
 def test_cdf_stream_diff_preserves_int64_with_nulls(tmp_path):
     """Round-11 review: a bigint column containing a NULL (the
     schema-evolution case) must not fall to float64 in the worker-side
     diff — values above 2^53 compare exactly (no dropped change, no
     phantom update) and emit as exact ints."""
     import pandas as pd
-
-    from kinesis_datastore_app_spark.sources.cdf_stream import _diff_rows
 
     root = str(tmp_path / "big")
     os.makedirs(root)
@@ -1179,9 +1223,7 @@ def test_cdf_stream_diff_preserves_int64_with_nulls(tmp_path):
         root,
         lambda prev, v: {"snapshot": snap("s2", [1, 2, 3], [big + 2, None, big])},
     )
-    rows = []
-    for b in range(4):
-        rows += list(_diff_rows(root, 1, 2, ["k"], ["x"], b, 4))
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["x"])
     assert len(rows) == 1, f"phantom/missing changes: {rows}"
     (k, x_before, x_after, change, version) = rows[0]
     assert (k, change, version) == (1, "update", 2)
@@ -1338,11 +1380,8 @@ def test_cdf_stream_diff_nan_is_null_equal(tmp_path):
     step, diverging from the batch digest (which renders NaN
     identically both sides). NaN↔NaN must be unchanged; NaN↔value is
     a real change."""
-    import math
-
     import pandas as pd
-
-    from kinesis_datastore_app_spark.sources.cdf_stream import _diff_rows
+    from pyspark.sql import types as T
 
     root = str(tmp_path / "nan")
     os.makedirs(root)
@@ -1360,33 +1399,84 @@ def test_cdf_stream_diff_nan_is_null_equal(tmp_path):
     occ_commit(root, lambda prev, v: {"snapshot": snap("s2", [nan, 1.5])})
     occ_commit(root, lambda prev, v: {"snapshot": snap("s3", [2.5, nan])})
 
-    rows = []
-    for b in range(4):
-        rows += list(_diff_rows(root, 1, 2, ["k"], ["x"], b, 4))
+    dbl = {"x": T.DoubleType()}
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["x"], types=dbl)
     assert rows == [], f"phantom update on identical NaN snapshots: {rows}"
 
-    rows = []
-    for b in range(4):
-        rows += list(_diff_rows(root, 2, 3, ["k"], ["x"], b, 4))
+    rows = _cdf_step_rows(root, 2, 3, ["k"], ["x"], types=dbl)
     assert sorted(r[0] for r in rows) == [1, 2], "NaN<->value change missed"
     assert all(r[3] == "update" for r in rows)
 
 
-def test_cdf_stream_arrow_batches_match_row_path(tmp_path):
-    """Optimization round 13: the CDF stream's read() now emits Arrow
-    RecordBatches (columnar, no per-row Python/pickle) when every
-    column type has a verified Spark↔Arrow mapping. The batches must
-    carry the BYTE-IDENTICAL feed the row-tuple path emits — including
-    the NULL-vs-NaN distinctions the row path's conv() preserves
-    (NaN is a float VALUE; pd.NA/absent renders as SQL NULL)."""
-    import math
+def _write_manifest_stem(root, name, n_buckets, ks, xs, ss=None):
+    """Write one bucket-partitioned stem of (k bigint, x double[, s
+    string]) rows through pyarrow (which keeps NULL and NaN distinct in
+    x) and return its manifest ``dirs`` map."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
 
+    from kinesis_datastore_app_spark.sources.cdf_stream import _bucket_series
+
+    cols = {"k": pa.array(ks, type=pa.int64()),
+            "x": pa.array(xs, type=pa.float64())}
+    if ss is not None:
+        cols["s"] = pa.array(ss, type=pa.string())
+    tbl = pa.table(cols)
+    bs = _bucket_series(pd.DataFrame({"k": ks}), ["k"], n_buckets)
+    dirs = {}
+    for b in sorted(set(bs)):
+        d = os.path.join(root, name, f"kbucket={b}")
+        os.makedirs(d)
+        idx = [i for i, bb in enumerate(bs) if bb == b]
+        papq.write_table(tbl.take(idx), os.path.join(d, "part.parquet"))
+        dirs[str(b)] = f"{name}/kbucket={b}"
+    return dirs
+
+
+def test_cdf_stream_insert_into_empty_bucket_has_null_before_image(
+    tmp_path,
+):
+    """A keyed-diff step whose v_from slice of a bucket is EMPTY reads
+    that side as the other side's zero-row frame, so the inserts'
+    before-images are typed NULLs — an untyped empty side padded them
+    with NaN VALUES (a double column's before-image read NaN, not
+    NULL, unlike read_table_changes)."""
+    from pyspark.sql import types as T
+
+    root = str(tmp_path / "eb")
+    os.makedirs(root)
+    NB = 4
+    d1 = _write_manifest_stem(root, "s1", NB, [1], [1.0])
+    occ_commit(
+        root,
+        lambda prev, v: {"buckets": {"cols": ["k"], "n": NB, "dirs": d1}},
+    )
+    d2 = _write_manifest_stem(root, "s2", NB, list(range(1, 9)), [2.0] * 8)
+    occ_commit(
+        root,
+        lambda prev, v: {"buckets": {"cols": ["k"], "n": NB, "dirs": d2}},
+    )
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["x"], NB, {"x": T.DoubleType()})
+    assert sorted(rows) == [(1, 1.0, 2.0, "update", 2)] + [
+        (k, None, 2.0, "insert", 2) for k in range(2, 9)
+    ]
+
+
+def test_cdf_stream_arrow_batches_emit_expected_feed(tmp_path):
+    """The CDF stream's keyed-diff step emits its whole feed as Arrow
+    RecordBatches carrying exactly the declared schema's names and
+    types, and every row of the step is pinned literally: unchanged
+    rows (including NULL↔NULL) are absent, NULL↔value transitions are
+    updates, and a string-only change is an update. pandas' to_parquet
+    stores a NaN or None float cell as NULL, so this fixture's float
+    gaps are NULLs on disk (the NaN-VALUE cases are pinned by
+    test_cdf_stream_nan_null_transition_is_update and the append-branch
+    test below, which write through pyarrow)."""
     import pandas as pd
+    from pyspark.sql import types as T
 
     from kinesis_datastore_app_spark.sources.cdf_stream import (
-        _diff_rows,
         _step_record_batches,
-        _stream_arrow_schema,
     )
 
     root = str(tmp_path / "ab")
@@ -1401,8 +1491,8 @@ def test_cdf_stream_arrow_batches_match_row_path(tmp_path):
         return name
 
     nan = float("nan")
-    # v1→v2 exercises: unchanged (k=1), NaN→value update (k=2),
-    # value→NULL update (k=3), delete (k=4), insert (k=5), NaN↔NaN
+    # v1→v2 exercises: unchanged (k=1), NULL→value update (k=2),
+    # value→NULL update (k=3), delete (k=4), insert (k=5), NULL↔NULL
     # unchanged (k=6), string-only update (k=7)
     occ_commit(
         root,
@@ -1427,59 +1517,37 @@ def test_cdf_stream_arrow_batches_match_row_path(tmp_path):
         },
     )
 
-    keys_t, vals_t = [("k", "bigint")], [("x", "double"), ("s", "string")]
-    schema = _stream_arrow_schema(keys_t, vals_t)
-    assert schema is not None
-
-    def norm(row):
-        return tuple(
-            "NaN"
-            if isinstance(x, float) and math.isnan(x)
-            else x
-            for x in row
-        )
-
-    row_feed, arrow_feed = [], []
+    types = {"x": T.DoubleType(), "s": T.StringType()}
+    schema = _cdf_schema(["k"], ["x", "s"], types)
     for b in range(4):
-        row_feed += [
-            norm(r) for r in _diff_rows(root, 1, 2, ["k"], ["x", "s"], b, 4)
-        ]
         for batch in _step_record_batches(
-            root, 1, 2, keys_t, vals_t, b, 4, schema
+            root, 1, 2, ["k"], ["x", "s"], b, 4, schema
         ):
-            assert [f.name for f in batch.schema] == [
-                f.name for f in schema
-            ]
-            arrow_feed += [
-                norm(tuple(d[f.name] for f in schema))
-                for d in batch.to_pylist()
-            ]
-    assert sorted(map(repr, arrow_feed)) == sorted(map(repr, row_feed))
-    # the feed itself is what the NaN tests pin: spot-check shape here
-    kinds = {r[0]: r[5] for r in arrow_feed}
-    assert kinds == {2: "update", 3: "update", 4: "delete", 5: "insert", 7: "update"}
+            assert batch.schema == schema
+    # (k, x_before, s_before, x_after, s_after, change_type, version)
+    feed = _cdf_step_rows(root, 1, 2, ["k"], ["x", "s"], types=types)
+    assert sorted(feed) == [
+        (2, None, "b", 9.5, "b", "update", 2),
+        (3, 2.5, "c", None, "c", "update", 2),
+        (4, 3.5, "d", None, None, "delete", 2),
+        (5, None, None, 5.5, "g", "insert", 2),
+        (7, 4.5, "f", 4.5, "F", "update", 2),
+    ]
 
 
-def test_cdf_stream_arrow_append_branch_matches_row_path(tmp_path):
-    """r14 (ADVICE r13): the BLIND-APPEND fast branch of the Arrow
-    emission path (null before-images, schema-evolution pad, constant
-    insert labels — _step_record_batches' first return) compared
-    row-for-row against _diff_rows' own fast branch over a real
-    manifest-extension step. The keyed-diff branch is pinned by
-    test_cdf_stream_arrow_batches_match_row_path; this closes the
-    append branch, which until now only the e2e oracle key covered."""
+def test_cdf_stream_arrow_append_branch_emits_expected_feed(tmp_path):
+    """The BLIND-APPEND branch of the CDF stream's emission (null
+    before-images, schema-evolution pad, constant insert labels)
+    over a real manifest-extension step, every row pinned literally:
+    a float NaN VALUE stays NaN and a NULL stays NULL, a duplicate key
+    re-emits as an insert, and the column the appended stem lacks
+    pads to NULL."""
     import math
 
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as papq
+    from pyspark.sql import types as T
 
     from kinesis_datastore_app_spark.sources.cdf_stream import (
         _append_step_new_paths,
-        _bucket_series,
-        _diff_rows,
-        _step_record_batches,
-        _stream_arrow_schema,
     )
 
     root = str(tmp_path / "app")
@@ -1487,22 +1555,7 @@ def test_cdf_stream_arrow_append_branch_matches_row_path(tmp_path):
     NB = 4
 
     def write_stem(name, ks, xs, ss=None):
-        """Write one bucket-partitioned stem (pyarrow keeps NULL vs NaN
-        distinct in x) and return its manifest dirs entry map."""
-        cols = {"k": pa.array(ks, type=pa.int64()),
-                "x": pa.array(xs, type=pa.float64())}
-        if ss is not None:
-            cols["s"] = pa.array(ss, type=pa.string())
-        tbl = pa.table(cols)
-        bs = _bucket_series(pd.DataFrame({"k": ks}), ["k"], NB)
-        dirs = {}
-        for b in sorted(set(bs)):
-            d = os.path.join(root, name, f"kbucket={b}")
-            os.makedirs(d)
-            idx = [i for i, bb in enumerate(bs) if bb == b]
-            papq.write_table(tbl.take(idx), os.path.join(d, "part.parquet"))
-            dirs[str(b)] = f"{name}/kbucket={b}"
-        return dirs
+        return _write_manifest_stem(root, name, NB, ks, xs, ss)
 
     nan = float("nan")
     d1 = write_stem(
@@ -1533,37 +1586,136 @@ def test_cdf_stream_arrow_append_branch_matches_row_path(tmp_path):
         _append_step_new_paths(root, 1, 2, ["k"], b, NB) for b in range(NB)
     )
 
-    keys_t, vals_t = [("k", "bigint")], [("x", "double"), ("s", "string")]
-    schema = _stream_arrow_schema(keys_t, vals_t)
-    assert schema is not None
-
-    def norm(row):
-        return tuple(
-            "NaN" if isinstance(x, float) and math.isnan(x) else x
-            for x in row
+    feed = _cdf_step_rows(
+        root, 1, 2, ["k"], ["x", "s"], NB,
+        types={"x": T.DoubleType(), "s": T.StringType()},
+    )
+    # NaN != NaN, so compare with NaN spelled as a marker
+    norm = [
+        tuple(
+            "NaN" if isinstance(x, float) and math.isnan(x) else x for x in r
         )
+        for r in feed
+    ]
+    # (k, x_before, s_before, x_after, s_after, change_type, version)
+    assert sorted(norm) == [
+        (1, None, None, "NaN", None, "insert", 2),
+        (10, None, None, 1.5, None, "insert", 2),
+        (11, None, None, None, None, "insert", 2),
+        (12, None, None, 2.5, None, "insert", 2),
+    ]
 
-    row_feed, arrow_feed = [], []
-    for b in range(NB):
-        row_feed += [
-            norm(r) for r in _diff_rows(root, 1, 2, ["k"], ["x", "s"], b, NB)
-        ]
-        for batch in _step_record_batches(
-            root, 1, 2, keys_t, vals_t, b, NB, schema
-        ):
-            assert [f.name for f in batch.schema] == [f.name for f in schema]
-            arrow_feed += [
-                norm(tuple(d[f.name] for f in schema))
-                for d in batch.to_pylist()
-            ]
-    assert sorted(map(repr, arrow_feed)) == sorted(map(repr, row_feed))
-    # every appended row surfaces as an insert with a null before-image,
-    # including the duplicate key; the evolved column pads to NULL
-    assert len(arrow_feed) == 4
-    assert {r[5] for r in arrow_feed} == {"insert"}
-    assert all(r[1] is None and r[2] is None for r in arrow_feed)
-    assert sorted(r[0] for r in arrow_feed) == [1, 10, 11, 12]
-    assert all(r[4] is None for r in arrow_feed)  # padded "s_after"
+
+def test_cdf_stream_typed_value_columns_match_batch_feed(tmp_path, spark):
+    """timestamp, date and decimal(10,2) value columns stream through
+    readStream.format("cdf_stream") and deliver exactly the rows
+    cdc.read_table_changes returns over the same steps: a keyed-diff
+    step (v1→v2: updates on each type, NULL→value, delete, insert) and
+    a blind-append step (v2→v3). A decimal(10,2) spec must parse (its
+    comma is not a column separator), and a timestamp column must not
+    fall to a per-row conversion (tz-naive TypeError in every task)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from kinesis_datastore_app_spark.operators.cdc import (
+        append_rows,
+        commit_bucketed_table,
+        read_table_changes,
+    )
+    from kinesis_datastore_app_spark.sources.cdf_stream import (
+        CdfStreamDataSource,
+    )
+    from kinesis_datastore_app_spark.streaming.queries import (
+        _run_wallclock_to_memory,
+    )
+
+    ddl = "k bigint, ts timestamp, d date, amt decimal(10,2)"
+    t0, d0 = dt.datetime(2024, 1, 1, 9, 30, 15, 250000), dt.date(2024, 1, 1)
+    v1 = [
+        (1, t0, d0, Decimal("1.25")),
+        (2, t0, d0, Decimal("2.50")),
+        (3, t0, d0, Decimal("3.75")),
+        (4, t0, d0, Decimal("4.00")),
+        (5, t0, d0, Decimal("5.05")),
+        (6, None, None, None),
+    ]
+    v2 = [
+        (1, t0, d0, Decimal("1.25")),
+        (2, t0 + dt.timedelta(microseconds=1), d0, Decimal("2.50")),
+        (3, t0, d0 + dt.timedelta(days=1), Decimal("3.75")),
+        (4, t0, d0, Decimal("4.01")),
+        (6, t0, d0, Decimal("6.00")),
+        (7, t0, d0, Decimal("-7.77")),
+    ]
+    root = str(tmp_path / "typed")
+    for rows in (v1, v2):
+        commit_bucketed_table(
+            spark, root, spark.createDataFrame(rows, ddl), ["k"], 4
+        )
+    append_rows(
+        spark,
+        root,
+        spark.createDataFrame(
+            [(8, t0, d0, Decimal("8.88")), (9, None, d0, None)], ddl
+        ),
+    )
+
+    vals = ["ts", "d", "amt"]
+    cols = ["k", *[f"{v}_before" for v in vals], *[f"{v}_after" for v in vals]]
+    cols += ["change_type", "version"]
+    want = sorted(
+        (
+            tuple(r)
+            for v in (1, 2)
+            for r in read_table_changes(spark, root, v, v + 1, ["k"], vals)
+            .withColumn("version", F.lit(v + 1).cast("bigint"))
+            .select(*cols)
+            .collect()
+        ),
+        key=repr,
+    )
+    # v1→v2: three typed updates, NULL→value, delete, insert; v2→v3:
+    # two appended inserts
+    assert len(want) == 8
+    spark.dataSource.register(CdfStreamDataSource)
+    sdf = (
+        spark.readStream.format("cdf_stream")
+        .option("path", root)
+        .option("keys", "k:bigint")
+        .option("vals", "ts:timestamp, d:date, amt:decimal(10,2)")
+        .load()
+    )
+    got = _run_wallclock_to_memory(
+        sdf, "cdf_typed", len(want), None, "kdas_cdft_", timeout_s=90.0
+    )
+    got_rows = [tuple(r) for r in got.select(*cols).collect()]
+    assert sorted(got_rows, key=repr) == want
+
+
+def test_txnlog_sink_batch_refuses_bucket_manifest_table(tmp_path, spark):
+    """The COW streaming sink reads the previous version's snapshot dir;
+    a bucket-manifest table has none, so a sink batch onto one would
+    commit the batch ALONE over the whole table. It must raise instead
+    and leave the latest version unchanged."""
+    from pyspark.sql import functions as F
+
+    from kinesis_datastore_app_spark import txnlog
+    from kinesis_datastore_app_spark.streaming.queries import txnlog_sink_batch
+
+    root = str(tmp_path / "t")
+    _boot_bucketed(spark, root, n_keys=100, n_buckets=4)
+    latest = txnlog.read_latest(root)
+    batch = spark.createDataFrame(
+        [(1, 100, "x", 1.0, "2024-01-01 00:00:00")],
+        "event_id long, user_id long, event_type string, value double, "
+        "ts_s string",
+    ).select("event_id", "user_id", "event_type", "value",
+             F.col("ts_s").cast("timestamp").alias("ts"))
+    with pytest.raises(ValueError, match="bucket-manifest"):
+        txnlog_sink_batch(root, batch, 0)
+    assert txnlog.read_latest(root) == latest
 
 
 def test_vacuum_keeps_live_delete_vectors_and_reclaims_dropped(tmp_path):
@@ -1977,8 +2129,7 @@ def test_cdf_stream_nan_null_transition_is_update(tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as papq
-
-    from kinesis_datastore_app_spark.sources.cdf_stream import _diff_rows
+    from pyspark.sql import types as T
 
     root = str(tmp_path / "nn")
     os.makedirs(root)
@@ -1997,9 +2148,8 @@ def test_cdf_stream_nan_null_transition_is_update(tmp_path):
     occ_commit(root, lambda p, v: {"snapshot": snap("s2", [nan, None])})
     occ_commit(root, lambda p, v: {"snapshot": snap("s3", [nan, None])})
 
-    rows = []
-    for b in range(4):
-        rows += list(_diff_rows(root, 1, 2, ["k"], ["x"], b, 4))
+    dbl = {"x": T.DoubleType()}
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["x"], types=dbl)
     assert sorted(r[0] for r in rows) == [1, 2], (
         f"NaN<->NULL transition not emitted: {rows}"
     )
@@ -2011,9 +2161,7 @@ def test_cdf_stream_nan_null_transition_is_update(tmp_path):
     assert math.isnan(by_key[2][1]) and by_key[2][2] is None
 
     # identical NaN/NULL snapshots: still no phantom updates
-    rows = []
-    for b in range(4):
-        rows += list(_diff_rows(root, 2, 3, ["k"], ["x"], b, 4))
+    rows = _cdf_step_rows(root, 2, 3, ["k"], ["x"], types=dbl)
     assert rows == [], f"phantom update across identical snapshots: {rows}"
 
 
@@ -2057,7 +2205,8 @@ def test_cdf_stream_committed_restart_floor_prevents_duplicates(tmp_path):
         return steps, offlog_end
 
     # first run: deliver through version 5, then die
-    r1 = _CdfStreamReader(opts)
+    schema = _cdf_schema(["k"], ["x"])
+    r1 = _CdfStreamReader(opts, schema)
     r1.initialOffset()
     s1, _ = drive(r1, 1, 4)
     assert s1 == [(1, 2), (2, 3), (3, 4), (4, 5)]
@@ -2065,7 +2214,7 @@ def test_cdf_stream_committed_restart_floor_prevents_duplicates(tmp_path):
     # restart, last batch COMMITTED: Spark's first call is
     # latestOffset() on a fresh reader; the degenerate batch runs with
     # start=committed(5), then the loop continues from the offset log
-    r2 = _CdfStreamReader(opts)
+    r2 = _CdfStreamReader(opts, schema)
     end0 = r2.latestOffset()["version"]
     parts = r2.partitions({"version": 5}, {"version": end0})
     assert parts == [], "degenerate regressed batch emitted data"
@@ -2084,7 +2233,7 @@ def test_cdf_stream_committed_restart_floor_prevents_duplicates(tmp_path):
     # the speculative lo as a delivered floor clamped the replay to
     # empty and LOST the killed batch's step (the round-12 regression
     # this test pins).
-    r3 = _CdfStreamReader(opts)
+    r3 = _CdfStreamReader(opts, schema)
     spec = r3.partitions({"version": 5}, {"version": 5})
     assert spec == []
     replay = r3.partitions({"version": 4}, {"version": 5})
@@ -3014,7 +3163,6 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
         read_table_changes,
     )
     from kinesis_datastore_app_spark.sources.cdf_stream import (
-        _diff_rows,
         _snapshot_read_plan,
     )
 
@@ -3038,7 +3186,6 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
         v: nbytes(_snapshot_read_plan(root, v, ["k"], 0, 3)[0]) for v in (1, 2)
     }
     seen = {1: set(), 2: set()}
-    rows = []
     for b in range(n):
         for v in (1, 2):
             paths, pruned = _snapshot_read_plan(root, v, ["k"], b, n)
@@ -3049,7 +3196,7 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
                 f"task {b} at v{v} read {nbytes(paths)} bytes, not less "
                 f"than one fallback task's {flat_bytes[v]}"
             )
-        rows += list(_diff_rows(root, 1, 2, ["k"], ["v"], b, n))
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["v"], n)
     assert seen[1] & seen[2], "no carried files shared across versions"
     assert all(nbytes(seen[v]) == flat_bytes[v] for v in (1, 2))
     batch = sorted(
@@ -3060,11 +3207,10 @@ def test_cdf_stream_read_plan_over_bucket_manifest_versions(
     assert len(batch) == 3  # two updates + one insert
 
     # mismatched reader count (3 does not divide 8): fallback, same rows
-    odd = []
     for b in range(3):
         paths, pruned = _snapshot_read_plan(root, 1, ["k"], b, 3)
         assert not pruned and paths
-        odd += list(_diff_rows(root, 1, 2, ["k"], ["v"], b, 3))
+    odd = _cdf_step_rows(root, 1, 2, ["k"], ["v"], 3)
     assert sorted((r[0], r[1], r[2], r[3]) for r in odd) == batch
 
 
@@ -3712,10 +3858,9 @@ def test_schema_evolution_manifest_gates_and_zero_movement(
         merge_into,
         read_table_state,
     )
-    from kinesis_datastore_app_spark.sources.cdf_stream import (
-        _diff_rows,
-        _read_frame,
-    )
+    from pyspark.sql import types as T
+
+    from kinesis_datastore_app_spark.sources.cdf_stream import _read_frame
 
     root = str(tmp_path / "t")
     _boot_bucketed(spark, root, n_keys=12, n_buckets=4)
@@ -3793,11 +3938,9 @@ def test_schema_evolution_manifest_gates_and_zero_movement(
 
     # the CDF stream's append fast path carries the evolved column
     v_new = txnlog.read_latest(root)[0]
-    step = [
-        r
-        for b in range(4)
-        for r in _diff_rows(root, v_new - 1, v_new, ["k"], ["v", "w"], b, 4)
-    ]
+    step = _cdf_step_rows(
+        root, v_new - 1, v_new, ["k"], ["v", "w"], types={"w": T.StringType()}
+    )
     assert step == [(20, None, None, 200, "x", "insert", v_new)]
     # mixed-schema frame read: old stem lacks w — typed NULLs, never
     # first-footer-wins column loss (order-independent)
@@ -3905,7 +4048,6 @@ def test_cdf_stream_append_step_emits_duplicates_and_reads_no_base(
     )
     from kinesis_datastore_app_spark.sources.cdf_stream import (
         _append_step_new_paths,
-        _diff_rows,
         _snapshot_read_plan,
     )
 
@@ -3915,11 +4057,7 @@ def test_cdf_stream_append_step_emits_duplicates_and_reads_no_base(
     dup = spark.createDataFrame([(7, 70), (9, 900)], "k bigint, v bigint")
     append_rows(spark, root, dup)
 
-    rows = [
-        r
-        for b in range(4)
-        for r in _diff_rows(root, 1, 2, ["k"], ["v"], b, 4)
-    ]
+    rows = _cdf_step_rows(root, 1, 2, ["k"], ["v"])
     # schema: (k, v_before, v_after, change_type, version)
     assert sorted(rows) == [
         (7, None, 70, "insert", 2),
@@ -3947,9 +4085,5 @@ def test_cdf_stream_append_step_emits_duplicates_and_reads_no_base(
         _append_step_new_paths(root, 2, 3, ["k"], 0, 4) is None
     ), "merge step wrongly classified as blind append"
     # and the fallback diff still reports that step correctly
-    step = [
-        r
-        for b in range(4)
-        for r in _diff_rows(root, 2, 3, ["k"], ["v"], b, 4)
-    ]
+    step = _cdf_step_rows(root, 2, 3, ["k"], ["v"])
     assert (3, 30, 31, "update", 3) in step
