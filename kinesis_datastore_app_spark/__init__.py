@@ -20,6 +20,9 @@ UDFs appear only where built-ins cannot express the semantics, and then only
 as Arrow-vectorized pandas UDFs.
 """
 
+# installs lazy zipimport invalidation in every process that imports the
+# package, Python workers included (see _pyworker's docstring)
+from kinesis_datastore_app_spark import _pyworker  # noqa: F401
 from kinesis_datastore_app_spark.session import get_spark
 
 __all__ = ["get_spark"]

@@ -1380,18 +1380,21 @@ def test_cdf_stream_diff_nan_is_null_equal(tmp_path):
     step, diverging from the batch digest (which renders NaN
     identically both sides). NaN↔NaN must be unchanged; NaN↔value is
     a real change."""
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as papq
     from pyspark.sql import types as T
 
     root = str(tmp_path / "nan")
     os.makedirs(root)
 
     def snap(name, xs):
+        # pyarrow keeps NaN a float value (pandas to_parquet stores NULL)
         d = os.path.join(root, name)
         os.makedirs(d)
-        pd.DataFrame({"k": [1, 2], "x": xs}).to_parquet(
-            os.path.join(d, "part.parquet"), index=False
+        t = pa.table(
+            {"k": pa.array([1, 2], pa.int64()), "x": pa.array(xs, pa.float64())}
         )
+        papq.write_table(t, os.path.join(d, "part.parquet"))
         return name
 
     nan = float("nan")
