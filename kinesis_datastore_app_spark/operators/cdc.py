@@ -2943,14 +2943,17 @@ def commit_bucketed_table(
     """Commit ``df`` as a BUCKET-MANIFEST version (round 13 — the
     file-granular commit form the r12 verdict ranked missing #1): rows
     land hash-partitioned into ``kbucket=N`` dirs
-    (write_bucketed_snapshot — same stable pandas hash everywhere) and
+    (write_bucketed_snapshot — one mapInArrow job whose tasks hash with
+    _bucket_series, the layout's one hash, and write their own bucket
+    files) and
     the version payload names EACH bucket's dir individually
     (``{"buckets": {"cols", "n", "dirs"}}``), so a later partial
     commit (merge_into, txnlog_apply_feed_batch) can replace only the
     buckets its keys touch and carry every other bucket forward BY
     REFERENCE — a MERGE of a tiny CDC source into a 100 TB target
     rewrites O(touched buckets), never the table. Bucket keys must be
-    non-null (enforced in the bucket UDF). This is the bootstrap/full-
+    non-null (the writer's tasks raise on a NULL key, and no version is
+    committed). This is the bootstrap/full-
     overwrite writer; the table's logical state is the union of the
     manifest's dirs (txnlog.data_paths).
 
@@ -2981,8 +2984,10 @@ def commit_bucketed_table(
         # schedule (~1.3 s measured even on an empty local frame) and
         # would part-recompute non-empty plans the write is about to
         # run. Measured r13: the empty write job cost ~1.1 s of
-        # stream_append_sink's bootstrap (Python-UDF worker spin-up +
-        # dynamic-partition writer for zero rows).
+        # stream_append_sink's bootstrap, when the writer was a
+        # bucket-id pandas UDF feeding Spark's dynamic-partition write;
+        # the mapInArrow writer still costs a job schedule for zero
+        # rows.
         #
         # r14 guard (ADVICE): the declaration is verified driver-side at
         # zero job cost — the analyzed plan must PROVE zero rows, either

@@ -82,17 +82,35 @@ def _bucket_series(df, keys: list[str], n_buckets: int):
     snapshot sides of a step (round-11 review). Normalization is
     vectorized: integer/float keys drop to plain numpy int64/float64
     (no per-row int→str — the first stringify-everything fix cost ~25%
-    of the 16× probe wall); everything else stringifies. The
+    of the 16× probe wall); timestamp keys drop to int64 epoch
+    nanoseconds of their UTC (session-tz) wall time, whether they
+    arrive tz-aware (an Arrow batch, a pyarrow read of a stem) or
+    naive (a pandas UDF) — their string form differs by the zone
+    suffix AND by the other rows of the batch (pandas drops an
+    all-midnight column's time part and pads a fractional one);
+    everything else stringifies. The
     consistency requirement is that every task of one step runs the
     same pandas build — which Spark's single shipped Python environment
     gives; a rolling-upgrade cluster mixing pandas versions must pin
     them (same caveat as any cross-executor Arrow/pandas contract)."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     norm = {}
     for k in keys:
         s = df[k]
+        arrow_t = getattr(s.dtype, "pyarrow_dtype", None)
+        if (
+            pa.types.is_timestamp(arrow_t)
+            if arrow_t is not None
+            else pd.api.types.is_datetime64_any_dtype(s.dtype)
+        ):
+            if s.dt.tz is not None:
+                s = s.dt.tz_convert("UTC").dt.tz_localize(None)
+            ns = s.astype("datetime64[ns]").to_numpy()
+            norm[k] = pd.Series(ns.view("int64"), index=s.index)
+            continue
         try:
             if pd.api.types.is_integer_dtype(s.dtype):
                 norm[k] = pd.Series(
@@ -117,14 +135,28 @@ def _bucket_series(df, keys: list[str], n_buckets: int):
 BUCKET_COL = "kbucket"
 
 
+def _refuse_null_keys(frame, keys: list[str]) -> None:
+    """Raise on any NULL (or NaN) bucket key — a NULL has no stable
+    bucket across the writer, the touched-bucket collects and the
+    reader (a nullable int batch widens to float64 on one side and
+    stays Arrow-backed on another)."""
+    for k in keys:
+        if frame[k].isna().any():
+            raise ValueError(
+                f"bucketed snapshot layout requires non-null bucket "
+                f"keys; column {k!r} has nulls"
+            )
+
+
 def bucket_id_udf(keys: list[str], n_buckets: int):
     """The Arrow-batched pandas UDF computing each row's stable bucket
-    id over ``keys`` — ONE function object shared by every writer and
-    reader of the bucket layout (write_bucketed_snapshot, the CDF
-    stream's task filter, and round 13's partial-commit writers in
-    operators/cdc.py), so the row→bucket mapping can never drift
-    between sides. Raises loudly on NULL bucket keys (see
-    write_bucketed_snapshot's constraint note)."""
+    id over ``keys`` — the column-expression form of _bucket_series,
+    for the touched-bucket collects (cdc.partial_bucket_payload, the
+    CDF-feed apply in streaming/queries.py). The shared unit is
+    _bucket_series itself: write_bucketed_snapshot's tasks and the CDF
+    stream's task filter call it directly, so the row→bucket mapping
+    can never drift between sides. Raises loudly on NULL bucket keys,
+    with the writer's message."""
     from pyspark.sql.functions import pandas_udf
 
     keys = list(keys)
@@ -134,51 +166,140 @@ def bucket_id_udf(keys: list[str], n_buckets: int):
         import pandas as pd
 
         frame = pd.DataFrame(dict(zip(keys, cols)))
-        for k in keys:
-            if frame[k].isna().any():
-                raise ValueError(
-                    f"bucketed snapshot layout requires non-null bucket "
-                    f"keys; column {k!r} has nulls"
-                )
+        _refuse_null_keys(frame, keys)
         return _bucket_series(frame, keys, n_buckets).astype("int64")
 
     return _kb
+
+
+# Row-group floor of the stem writer: a bucket's rows are buffered
+# until this many accumulate, so a big rewrite does not write one tiny
+# row group per (Arrow batch, bucket).
+_ROW_GROUP_ROWS = 1 << 17
+
+
+def _write_bucket_files(batches, dest: str, keys: list[str], n_buckets: int):
+    """One task of write_bucketed_snapshot: hash each Arrow batch's
+    key columns (_bucket_series), split the batch by bucket, and keep
+    one ParquetWriter open per bucket seen, on a hidden non-``.parquet``
+    temp name that no reader lists. At task end every file is closed
+    and ``os.replace``d to ``kbucket=N/part-<partition>-<attempt
+    uuid>.snappy.parquet``; yields one ``(bucket, relpath, rows)`` row
+    per file. A failing task removes its temp files; anything a killed
+    attempt leaves behind is swept by the driver."""
+    import contextlib
+    import os
+    import uuid
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    from pyspark import TaskContext
+
+    stem = f"part-{TaskContext.get().partitionId():05d}-{uuid.uuid4().hex}"
+    writers: dict[int, papq.ParquetWriter] = {}
+    pending: dict[int, list] = {}
+    rows: dict[int, int] = {}
+
+    def flush(b: int) -> None:
+        writers[b].write_table(pa.Table.from_batches(pending.pop(b)))
+
+    def tmp_path(b: int) -> str:
+        return os.path.join(dest, f"{BUCKET_COL}={b}", f".{stem}.tmp")
+
+    try:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            frame = rb.select(keys).to_pandas()
+            _refuse_null_keys(frame, keys)
+            ids = _bucket_series(frame, keys, n_buckets).to_numpy()
+            order = np.argsort(ids, kind="stable")
+            ids, rb = ids[order], rb.take(pa.array(order))
+            cuts = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
+            for lo, hi in zip(cuts, cuts[1:]):
+                b = int(ids[lo])
+                if b not in writers:
+                    os.makedirs(os.path.dirname(tmp_path(b)), exist_ok=True)
+                    writers[b] = papq.ParquetWriter(
+                        tmp_path(b), rb.schema, store_schema=False
+                    )
+                    rows[b] = 0
+                pending.setdefault(b, []).append(rb.slice(lo, hi - lo))
+                rows[b] += hi - lo
+                if sum(x.num_rows for x in pending[b]) >= _ROW_GROUP_ROWS:
+                    flush(b)
+        for b in list(pending):
+            flush(b)
+        for w in writers.values():
+            w.close()
+    except BaseException:
+        for b, w in writers.items():
+            with contextlib.suppress(OSError):
+                w.close()
+                os.remove(tmp_path(b))
+        raise
+    done = []
+    for b in sorted(writers):
+        rel = f"{BUCKET_COL}={b}/{stem}.snappy.parquet"
+        os.replace(tmp_path(b), os.path.join(dest, rel))
+        done.append({"bucket": b, "relpath": rel, "rows": rows[b]})
+    yield pa.RecordBatch.from_pylist(
+        done,
+        schema=pa.schema(
+            [("bucket", pa.int64()), ("relpath", pa.string()),
+             ("rows", pa.int64())]
+        ),
+    )
 
 
 def write_bucketed_snapshot(
     df, dest: str, keys: list[str], n_buckets: int
 ) -> list[int]:
     """Write ``df`` into ``dest`` in the BUCKET-KEYED layout — the one
-    bucket-partitioned stem writer behind every bucket-manifest commit
-    (operators/cdc.py): rows are hive-partitioned into ``kbucket=N``
-    subdirs by the SAME vectorized pandas hash the stream reader's
-    tasks use (_bucket_series, applied through an Arrow-batched pandas
-    UDF — one function object on both sides, so the file→bucket mapping
-    is consistent by construction). Returns the sorted bucket ids that
-    received rows (an empty bucket gets no dir); the caller's manifest
-    names each one, so the layout needs no spec file of its own.
+    stem writer behind every bucket-manifest commit
+    (operators/cdc.py): rows land in ``kbucket=N`` subdirs by the SAME
+    vectorized pandas hash the stream reader's tasks and
+    bucket_id_udf use (_bucket_series). Returns the sorted bucket ids
+    that received rows (an empty bucket gets no file); the caller's
+    manifest names each one, so the layout needs no spec file of its
+    own.
+
+    ONE ``mapInArrow`` job, no shuffle: every task hashes, splits and
+    writes its own bucket files (_write_bucket_files) — one file per
+    (task, bucket), nothing else: no ``.crc``, no ``_SUCCESS``, no
+    ``_temporary`` rename commit, no per-task sort on the bucket
+    column, no second Python worker for a bucket-id UDF. Spark's
+    commit protocol is redundant here because the stem is invisible
+    until the txnlog commit names it; the driver keeps only the files
+    the successful attempts returned and deletes everything else under
+    ``dest`` (failed- or killed-attempt debris). Speculative execution
+    must stay off (Spark's default): a losing speculative attempt could
+    publish its files after the sweep. Files carry no
+    ``ARROW:schema`` footer blob: every reader types them by the
+    Parquet schema (Spark under the manifest schema, the CDF stream's
+    Arrow cast, the footer-stat collectors), see SCALE.md.
 
     Constraint (enforced loudly, never silently mis-bucketed): bucket
-    key columns must be NON-NULL — Spark→pandas conversion widens a
-    nullable int batch to float64, which would hash NULL keys into a
-    different bucket than the reader's Arrow-backed read does."""
+    key columns must be NON-NULL. A failed write removes ``dest``."""
     import os
-
-    from pyspark.sql import functions as F
+    import shutil
 
     keys = list(keys)
-    _kb = bucket_id_udf(keys, n_buckets)
-    (
-        df.withColumn(BUCKET_COL, _kb(*[F.col(k) for k in keys]))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(dest)
-    )
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(dest)
-        if d.startswith(f"{BUCKET_COL}=")
-    )
+    try:
+        done = df.mapInArrow(
+            lambda it: _write_bucket_files(it, dest, keys, n_buckets),
+            "bucket long, relpath string, rows long",
+        ).collect()
+    except BaseException:
+        shutil.rmtree(dest, ignore_errors=True)
+        raise
+    keep = {os.path.join(dest, r.relpath) for r in done}
+    for dirpath, _, filenames in os.walk(dest):
+        for f in filenames:
+            if os.path.join(dirpath, f) not in keep:
+                os.remove(os.path.join(dirpath, f))
+    return sorted({int(r.bucket) for r in done})
 
 
 def _parquet_files(dirs) -> list[str]:
